@@ -5945,7 +5945,11 @@ object Lake {
     // own footer row counts.
     val (instrumented, audit) = observedAudit(base.checks, aligned)
     val staged = stageWrite(spark, lakeDir, instrumented, layoutSpecsOf(base))
-    // roll the invisible staged files back on a violating/empty batch
+    // roll the invisible staged files back on a violating/empty batch.
+    // A crash between stageWrite and this rollback leaves the refused
+    // batch's files behind as orphans: no log entry names them, so no
+    // reader sees them, and `vacuum` reclaims them like any other
+    // unreferenced file once they are older than its `minAgeMs` grace.
     val expected =
       try audit()
       catch { case e: Throwable => deleteFiles(spark, lakeDir, staged); throw e }

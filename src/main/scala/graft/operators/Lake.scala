@@ -182,19 +182,11 @@ object Lake {
     * referenced-file set of the log up to this version, which is what
     * lets [[vacuum]] decide orphan-ness from the LATEST state alone —
     * one checkpoint load plus a bounded delta replay — instead of
-    * re-reading every retained delta.
-    *
-    * `historyComplete` is the format-migration guard: a state resolved
-    * through a LEGACY checkpoint (header `graft-checkpoint-v1`, written
-    * by builds that predate the history section, with no `H` lines)
-    * cannot know which retained-history files its ancestry references,
-    * so [[vacuum]] must fall back to the full-log referenced-set
-    * computation instead of trusting `files ++ history` — otherwise it
-    * would reclassify that retained history as orphans and delete it,
-    * breaking time travel on lakes created by earlier builds. */
+    * re-reading every retained delta. Every checkpoint this build reads
+    * (`v2` text, `v3` columnar) carries a complete history section, so
+    * that set is always trustworthy. */
   final case class LakeState(version: Long, schemaJson: String, files: LiveFiles,
       stats: Map[String, Seq[ColStat]] = Map.empty, history: Seq[String] = Seq.empty,
-      historyComplete: Boolean = true,
       /** Live deletion-vector attachments: data file → the sidecar dirs
         * whose positions are deleted from it. Reads of the file apply
         * the union. [[DeferredDvs]] on states resolved through a
@@ -479,7 +471,7 @@ object Lake {
     * fresh EAGER seq), so there is no removed-set to track — a
     * high-churn lake's referenced-but-removed list can approach corpus
     * size, and this keeps it off the driver exactly like the live
-    * paths. Materializing (rare: legacy fallbacks, text renders) costs
+    * paths. Materializing (rare: text renders) costs
     * one soft-cached entries job, counted by [[pathForceJobs]]. */
   final class DeferredHistory private[graft] (
       private[graft] val entriesDir: String,
@@ -1026,18 +1018,11 @@ object Lake {
       /** Per-file stats RESTATED for already-live files (rendered as
         * `ASF` lines) — [[analyzeStats]]' backfill commit: the named
         * files' recorded min/max merge these columns in, no data or
-        * file-list change. A restate for a file an interposed commit
-        * removed is skipped at replay (the file is gone; its stats
-        * died with it). */
+        * file-list change. Producers filter the list against the
+        * commit-time live set, which keeps [[applyDelta]]'s path-lazy
+        * liveness predicate sound; a restate for a file an interposed
+        * commit removed is skipped at replay. */
       statRestates: Seq[(String, Seq[ColStat])] = Seq.empty,
-      /** TRUE when the producer filtered the restates against the
-        * commit-time live set (the `ASF` tag — every current build;
-        * [[publish]] validates via the entries' F rows). FALSE for
-        * legacy `AS` lines, whose producers wrote the raw list: a
-        * PATH-LAZY replay cannot trust its approximate liveness
-        * predicate on those and validates the non-tail targets itself
-        * ([[applyDelta]], one bounded membership job). */
-      restatesFiltered: Boolean = true,
       /** CHECK constraints this commit ADDS (name → SQL predicate, `K`
         * lines) — see [[LakeState.checks]]. */
       checkAdds: Seq[(String, String)] = Seq.empty,
@@ -1094,7 +1079,7 @@ object Lake {
         * mid-rebase. The idempotent-replay guard for the streaming sink
         * and `txnAppId`/`txnVersion` batch writes. */
       txn: Option[(String, Long)] = None,
-      /** Stat restate (`AS`) lines this commit carries: per-file
+      /** Stat restate (`ASF`) lines this commit carries: per-file
         * per-column min/max replacements merged onto LIVE files — the
         * [[applyDelta]] semantics. A restate whose file an interposed
         * commit removed drops at rebase exactly as at replay. Used by
@@ -1285,7 +1270,7 @@ object Lake {
     * self-describing "requires reader ≥ N, this build reads ≤ M".
     *
     * Levels:
-    *   - 1: the base `graft-delta-v1` / `graft-checkpoint-v1/v2/v3` tag
+    *   - 1: the base `graft-delta-v1` / `graft-checkpoint-v2/v3` tag
     *     sets (implicit — never stamped);
     *   - 2: the `HX` history-checksum stub line, filtered restates
     *     (`ASF`) and detached-sidecar lines (`VD`) in deltas. (The DC/VC
@@ -1334,8 +1319,8 @@ object Lake {
     val dvx = rec.dvRemoves.sorted.map { case (f, s) => s"X\t${enc(f)}\t${enc(s)}" }
     val cdc = rec.cdcFiles.sorted.map { case (p, t) => s"C\t${enc(p)}\t${enc(t)}" }
     val txn = rec.txn.toSeq.map { case (a, v) => s"T\t${enc(a)}\t$v" }
-    // `ASF` = filtered-at-commit restates (see DeltaRecord.restatesFiltered);
-    // the legacy `AS` tag parses but is never written by current builds
+    // `ASF` = filtered-at-commit restates (see DeltaRecord.statRestates);
+    // the retired unfiltered `AS` tag is refused by [[parseDeltaFile]]
     val restates = rec.statRestates.sortBy(_._1).map { case (p, st) =>
       (Seq("ASF", enc(p)) ++ statsFields(st)).mkString("\t") }
     val kAdds = rec.checkAdds.sortBy(_._1).map { case (n, e) => s"K\t${enc(n)}\t${enc(e)}" }
@@ -1346,10 +1331,24 @@ object Lake {
       kAdds ++ kDrops ++ lay ++ blm)).mkString("\n")
   }
 
-  private def parseDeltaFile(text: String, version: Long): DeltaRecord = {
+  /** A log record's non-blank lines, refusing an EMPTY record with its
+    * kind and version: [[ExclusiveCreateLogStore]] creates the final name
+    * before it writes, so a writer that crashes in between leaves a
+    * zero-byte record behind. */
+  private def recordLines(text: String, what: String, version: Long): Seq[String] = {
     val lines = text.split('\n').toSeq.filter(_.nonEmpty)
+    if (lines.isEmpty)
+      throw new IllegalStateException(
+        s"$what at version $version is empty — a writer likely crashed between " +
+          "creating the record and writing it")
+    lines
+  }
+
+  private def parseDeltaFile(text: String, version: Long): DeltaRecord = {
+    val lines = recordLines(text, "delta record", version)
     val header = lines.head.split('\t')
-    require(header(0) == "graft-delta-v1", s"not a graft delta record: ${lines.head.take(60)}")
+    require(header(0) == "graft-delta-v1",
+      s"not a graft delta record at version $version: ${lines.head.take(60)}")
     checkMinReader(header.toSeq, "delta record") // FIRST, before any tag parse
     val action = header(1)
     val ts = header.lift(2).flatMap(_.toLongOption).getOrElse(0L)
@@ -1368,7 +1367,6 @@ object Lake {
     val kDrops = Seq.newBuilder[String]
     var layout: Option[Seq[String]] = None
     var bloomCols: Option[Seq[String]] = None
-    var legacyRestates = false
     lines.tail.foreach { l =>
       val f = l.split('\t').toSeq
       f.head match {
@@ -1383,9 +1381,11 @@ object Lake {
           added += ((p, parseStats(f.drop(2))))
           postImages += p
         case "ASF" => restates += ((dec(f(1)), parseStats(f.drop(2))))
-        case "AS" => // legacy: producer did not filter against the live set
-          restates += ((dec(f(1)), parseStats(f.drop(2))))
-          legacyRestates = true
+        case "AS" => throw new IllegalStateException(
+          s"delta record at version $version carries a retired legacy 'AS' " +
+            "(unfiltered restate) line; this build reads only filtered 'ASF' " +
+            "restates — replay the lake with an earlier graft build that still " +
+            "reads 'AS' and checkpoint it")
         case "R" => removed += dec(f(1))
         case "D" => dvAdds += ((dec(f(1)), dec(f(2))))
         case "VD" => dvDetached += dec(f(1))
@@ -1405,19 +1405,16 @@ object Lake {
     DeltaRecord(version, action, schemaJson, added.result(), removed.result(),
       rewrites.result(), ts, dvAdds.result(), dvDetached = dvDetached.result(),
       cdcFiles = cdcFiles.result(), dvRemoves = dvRemoves.result(), txn = txn,
-      statRestates = restates.result(), restatesFiltered = !legacyRestates,
-      checkAdds = kAdds.result(),
+      statRestates = restates.result(), checkAdds = kAdds.result(),
       checkDrops = kDrops.result(), layout = layout,
       postImages = postImages.result(), bloomCols = bloomCols)
   }
 
   /** Checkpoints are written under the `v2` header: `v2` PROMISES a
     * complete `H` (history) section, which is what lets [[vacuum]] trust
-    * `files ++ history` as the full referenced-file set. A `v1` header
-    * (builds that predate the history section) makes no such promise —
-    * its absence of `H` lines is ambiguous with a genuinely empty
-    * history — so states resolved through one carry
-    * `historyComplete = false` and vacuum falls back to the full log. */
+    * `files ++ history` as the full referenced-file set. The retired `v1`
+    * header (builds that predate the history section) made no such
+    * promise, so [[parseCheckpointFile]] refuses it. */
   private def renderCheckpoint(st: LakeState): String = {
     val header = "graft-checkpoint-v2"
     val schema = s"S\t${enc(st.schemaJson)}"
@@ -1438,14 +1435,18 @@ object Lake {
   }
 
   private def parseCheckpointFile(text: String, version: Long): LakeState = {
-    val lines = text.split('\n').toSeq.filter(_.nonEmpty)
+    val lines = recordLines(text, "checkpoint", version)
     val headerFields = lines.head.split('\t').toSeq
     checkMinReader(headerFields, "checkpoint") // FIRST, before any tag parse
-    val complete = headerFields.head match {
-      case "graft-checkpoint-v2" => true
-      case "graft-checkpoint-v1" => false // legacy: history section unknown
-      case other =>
-        throw new IllegalArgumentException(s"not a graft checkpoint: ${other.take(60)}")
+    headerFields.head match {
+      case "graft-checkpoint-v2" =>
+      case "graft-checkpoint-v1" => throw new IllegalStateException(
+        s"checkpoint at version $version uses the retired graft-checkpoint-v1 " +
+          "dialect (no H history section); this build reads only " +
+          "graft-checkpoint-v2/v3 — re-checkpoint the lake with an earlier " +
+          "graft build that still reads v1")
+      case other => throw new IllegalArgumentException(
+        s"not a graft checkpoint at version $version: ${other.take(60)}")
     }
     var schemaJson = ""
     val files = Seq.newBuilder[String]
@@ -1481,7 +1482,6 @@ object Lake {
       }
     }
     LakeState(version, schemaJson, files.result().sorted, stats.result(), hist.result().sorted,
-      historyComplete = complete,
       dvs = dvPairs.result().groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap,
       dvHistory = dvHist.result().sorted,
       cdc = cdc.result().sorted,
@@ -1933,7 +1933,7 @@ object Lake {
   }
 
   /** Load the checkpoint at `version`, dispatching on its header: a
-    * classic `v1`/`v2` text checkpoint parses on the driver; a `v3` stub
+    * classic `v2` text checkpoint parses on the driver; a `v3` stub
     * reads its parquet entries directory through a Spark job — columnar
     * decode in tasks, compact typed rows back, the driver's own parse
     * bounded at the O(KB) stub no matter how many files the lake holds. */
@@ -1957,7 +1957,7 @@ object Lake {
     var hXorS: Option[Long] = None
     var vXorS: Option[Long] = None
     def parseXor(v: String): Long = java.lang.Long.parseUnsignedLong(v, 16)
-    val stubLines = text.split('\n').toSeq.filter(_.nonEmpty)
+    val stubLines = recordLines(text, "checkpoint stub", version)
     // the mr= stamp gates FIRST: a stub carrying tags above this build's
     // feature table refuses with the version message, never "unknown tag"
     checkMinReader(stubLines.head.split('\t').toSeq, "checkpoint stub")
@@ -2149,7 +2149,6 @@ object Lake {
     }
     LakeState(version, schemaJson, liveFiles, stats.result(),
       history,
-      historyComplete = true,
       dvs = liveDvs,
       dvHistory = dvHistoryOut,
       cdc = cdcOut,
@@ -2216,7 +2215,8 @@ object Lake {
       throw new IllegalArgumentException(
         s"lake $lakeDir has no committed manifest version $version")
     val f = readLogFileHeader(fs, p).split('\t')
-    require(f(0) == "graft-delta-v1", s"not a graft delta record: ${f(0).take(60)}")
+    require(f(0) == "graft-delta-v1",
+      s"not a graft delta record at version $version: ${f(0).take(60)}")
     val counts = for {
       a <- f.lift(3).flatMap(_.toIntOption)
       d <- f.lift(4).flatMap(_.toIntOption)
@@ -2345,28 +2345,8 @@ object Lake {
     }
     val baseStats = (st.stats -- removed) ++ d.added.filter(_._2.nonEmpty).toMap
     // stat restates ([[analyzeStats]]) merge per column onto LIVE files;
-    // a restate whose file an interposed commit removed is skipped.
-    // The approximate path-lazy predicate above is sound only for
-    // producer-FILTERED restates (`ASF`): a LEGACY delta's raw list may
-    // name files dead BELOW the checkpoint, which no driver tail can
-    // see — validate those against the entries' F rows (one bounded
-    // membership job, only on the rare legacy-restate × path-lazy
-    // replay).
-    val restateSrc: Seq[(String, Seq[ColStat])] =
-      if (d.restatesFiltered || d.statRestates.isEmpty) d.statRestates
-      else postFiles match {
-        case dfl: DeferredFiles =>
-          val tailSet = dfl.tailAdded.toSet
-          val suspects = d.statRestates.map(_._1).filter(f => !tailSet(f))
-          if (suspects.isEmpty) d.statRestates
-          else {
-            val residents = residentsAmong(SparkSession.active,
-              dfl.entriesDir, suspects)
-            d.statRestates.filter(r => tailSet(r._1) || residents(r._1))
-          }
-        case _ => d.statRestates
-      }
-    val restated = restateSrc.filter(r => postFileSet(r._1))
+    // a restate whose file an interposed commit removed is skipped
+    val restated = d.statRestates.filter(r => postFileSet(r._1))
       .foldLeft(baseStats) { case (m, (f, st2)) =>
         m.updated(f, mergeStatCols(m.getOrElse(f, Seq.empty), st2))
       }
@@ -2376,9 +2356,6 @@ object Lake {
       // removed files stay referenced (time travel / in-range CDC reads
       // them until a retention vacuum spends that history)
       foldHistory(st.history, d.removed),
-      // a replay from a legacy (v1) checkpoint stays incomplete no matter
-      // how many deltas stack on top — the missing history is BELOW it
-      historyComplete = st.historyComplete,
       dvs = newDvs,
       // deduped: dvHistory's consumers treat it as a referenced-SET, and
       // dedup keeps it O(distinct sidecars) = O(sparse commits) — a
@@ -3476,7 +3453,6 @@ object Lake {
               val base = st.copy(
                 files = sortedFiles,
                 history = st.history.sorted,
-                historyComplete = true,
                 dvs = sortedDvs,
                 dvHistory = st.dvHistory.sorted,
                 cdc = st.cdc.sorted)
@@ -4676,7 +4652,6 @@ object Lake {
         postFiles,
         restatedStats,
         foldHistory(base.history, sc.removedFiles),
-        historyComplete = base.historyComplete,
         dvs = postDvs,
         dvHistory = foldSidecarList(base.dvHistory, detached, dedupe = true),
         cdc = foldSidecarList(base.cdc, sc.cdcFiles.map(_._1), dedupe = false),
@@ -6637,35 +6612,6 @@ object Lake {
       case None => Seq.empty
       case Some(latest) =>
         val (fs, root) = fsRoot(spark, lakeDir)
-        // the legacy (v1-checkpoint) log replay, built lazily: only the
-        // !historyComplete fall-back pays for it
-        lazy val legacyLive: (Set[String], Set[String]) = {
-            // the latest state resolved through a LEGACY (v1) checkpoint,
-            // whose history section is unknowable — fall back to the full
-            // retained log: every retained delta's adds plus every
-            // checkpoint's file and history sections. Strictly more
-            // expensive (O(retained log)) and strictly safe; the next
-            // vacuumKeeping writes a v2 checkpoint and restores the
-            // latest-state-only fast path.
-            val (deltas, checkpoints) = listLog(fs, root)
-            val b = Set.newBuilder[String]
-            val bd = Set.newBuilder[String]
-            deltas.foreach { v =>
-              val d = deltaAt(spark, lakeDir, v)
-              b ++= d.added.map(_._1)
-              bd ++= d.dvAdds.map(_._2)
-              bd ++= d.cdcFiles.map(_._1)
-            }
-            checkpoints.foreach { c =>
-              val st = loadCheckpoint(spark, fs, root, c)
-              b ++= st.files
-              b ++= st.history
-              bd ++= distinctLiveSidecars(spark, st.dvs)
-              bd ++= st.dvHistory
-              bd ++= st.cdc
-            }
-            (b.result(), bd.result())
-          }
         val cutoff = System.currentTimeMillis() - minAgeMs
         // the Delta VACUUM shape: above [[VacuumDistributeMinKey]] the
         // recursive listing and the deletes run as Spark jobs — the
@@ -6677,7 +6623,7 @@ object Lake {
         val distribute =
           latest.files.length + latest.history.size >= vacuumDistributeMin(spark)
         val dead = latest.files match {
-          case dfl: DeferredFiles if latest.historyComplete && distribute =>
+          case dfl: DeferredFiles if distribute =>
             // PATH-LAZY fast path: the live-set diff runs inside the
             // listing job against the checkpoint entries' F+H rows; the
             // driver ships only the post-checkpoint TAILS (adds +
@@ -6690,9 +6636,7 @@ object Lake {
             orphanDataFiles(spark, lakeDir, dfl.entriesDir,
               (dfl.tailAdded ++ histExtra).toSet, cutoff, minAgeMs)
           case _ =>
-            val live: Set[String] =
-              if (latest.historyComplete) (latest.files ++ latest.history).toSet
-              else legacyLive._1
+            val live = (latest.files ++ latest.history).toSet
             dataFileInventory(spark, lakeDir, distribute)
               .filterNot { case (f, _) => live(f) }
               .filter { case (_, mtime) => minAgeMs <= 0 || mtime <= cutoff }
@@ -6731,12 +6675,9 @@ object Lake {
         // live-set path instead (correct, just forces the lists)
         val oneEntriesDir = deferredSecs.map(_._1).distinct.sizeIs <= 1
         val deadSidecar: Seq[String] =
-          if (!latest.historyComplete || deferredSecs.isEmpty || !oneEntriesDir) {
+          if (deferredSecs.isEmpty || !oneEntriesDir) {
             val liveSidecar: Set[String] =
-              if (latest.historyComplete)
-                distinctLiveSidecars(spark, latest.dvs) ++
-                  latest.dvHistory ++ latest.cdc
-              else legacyLive._2
+              distinctLiveSidecars(spark, latest.dvs) ++ latest.dvHistory ++ latest.cdc
             val liveTops = liveSidecar.map(sidecarTop)
             listSidecarDirsWithMtime(fs, root).collect {
               case (d, mtime) if !liveTops(d) && (minAgeMs <= 0 || mtime <= cutoff) => d
@@ -7482,12 +7423,8 @@ object Lake {
     // pre-existing checkpoint whose history named files reclaimed below.
     // Written BEFORE anything is deleted, so a crash mid-vacuum leaves
     // dangling log records that fail loudly, never silently-live files.
-    // the recomputed history IS complete for the retained log (older
-    // deltas are about to be retired), so the rewritten checkpoint also
-    // migrates a legacy-v1 lake onto the v2 fast path
     writeCheckpoint(spark, fs, root,
       oldestState.copy(history = histAbove.toSeq.sorted,
-        historyComplete = true,
         dvHistory = (liveDvSet -- oldestDvSet).toSeq.sorted,
         // the retention cut restarts the change feed's horizon: only the
         // sidecars of retained versions ABOVE the new oldest stay

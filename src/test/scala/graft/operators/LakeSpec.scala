@@ -670,8 +670,8 @@ class LakeSpec extends SparkTestBase {
     assert(ids(Lake.read(spark, out)) == (0L until 40L).toSet ++ (2000L until 2011L))
   }
 
-  test("legacy v1 checkpoint (no history section): vacuum falls back to the full log and keeps retained history") {
-    val out = freshDir("lake-legacy-ckpt")
+  test("checkpoint history section: vacuum keeps a pre-image retained through H lines and time travel to v0") {
+    val out = freshDir("lake-ckpt-history")
     writePlain(fixture(), out)
     Lake.adopt(spark, out) // v0
     // delete WITH history retained at v1: the pre-image files are live on
@@ -693,36 +693,25 @@ class LakeSpec extends SparkTestBase {
     val ckpt = new org.apache.hadoop.fs.Path(root,
       s"${Lake.LogDirName}/v${"%020d".format(10)}.checkpoint")
     assert(fs.exists(ckpt), "fixture must have crossed the checkpoint grid")
-    // downgrade the checkpoint to the LEGACY v1 format: v1 header, no H
-    // lines — exactly what a pre-history-section build would have written
-    val text = {
+    def ckptText(): String = {
       val in = fs.open(ckpt)
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
     }
-    assert(text.linesIterator.exists(_.startsWith("H\t")),
+    val text = ckptText()
+    assert(text.startsWith("graft-checkpoint-v2") &&
+      text.linesIterator.exists(_.startsWith("H\t")),
       "the v2 checkpoint must carry the retained history")
-    val legacy = text.linesIterator
-      .filterNot(_.startsWith("H\t")).toSeq
-      .updated(0, "graft-checkpoint-v1").mkString("\n")
-    val o = fs.create(ckpt, true)
-    try o.write(legacy.getBytes("UTF-8")) finally o.close()
-    // vacuum must NOT reclassify the retained pre-image as orphans: the
-    // legacy checkpoint cannot vouch for history, so the referenced set
-    // falls back to the full retained log
+    // vacuum must NOT reclassify the retained pre-image as an orphan: the
+    // checkpoint's H lines keep it in the referenced set
     val dead = Lake.vacuum(spark, out)
-    assert(dead.isEmpty, s"vacuum on a legacy-checkpoint lake deleted: $dead")
+    assert(dead.isEmpty, s"vacuum deleted retained history: $dead")
     assert(ids(Lake.readVersion(spark, out, 0L)) == (0L until 40L).toSet,
-      "time travel below the legacy checkpoint must survive the vacuum")
-    // a retention pass whose horizon reaches the legacy checkpoint
-    // REWRITES it in the v2 format (recomputed, complete history) and
-    // restores the latest-state-only fast path
+      "time travel below the checkpoint must survive the vacuum")
+    // a retention pass whose horizon reaches the checkpoint REWRITES it
+    // with the recomputed history, still in the v2 format
     Lake.vacuumKeeping(spark, out, keepVersions = 1)
-    val healed = {
-      val in = fs.open(ckpt)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    }
-    assert(healed.startsWith("graft-checkpoint-v2"),
-      "vacuumKeeping must migrate the lake back onto the v2 checkpoint format")
+    assert(ckptText().startsWith("graft-checkpoint-v2"),
+      "vacuumKeeping must rewrite the checkpoint in the v2 format")
     assert(ids(Lake.read(spark, out)) ==
       ((0L until 40L).toSet -- Set(0L, 7L)) ++ (3000L until 3009L))
     assert(Lake.vacuum(spark, out).isEmpty)
@@ -2508,7 +2497,7 @@ class LakeSpec extends SparkTestBase {
         s"every entries directory must belong to a live stub, got " +
           s"dirs=${dirsAfter.mkString(",")} stubs=${stubsAfter.mkString(",")}")
       val v8 = Lake.stateAt(spark, out, 8L)
-      assert(v8.files.nonEmpty && v8.historyComplete,
+      assert(v8.files.nonEmpty,
         "the overwrite checkpoint must resolve the retention-cut version")
       assert(Lake.read(spark, out).count() == 60, "reads survive the retention cut")
     } finally {
@@ -3768,56 +3757,6 @@ class LakeSpec extends SparkTestBase {
         "the dead file must never come back as a prune survivor")
       assert(Lake.reservedTotals(spark, st, st.files)._1.isDefined,
         "whole-table pricing must not trip its torn check on the raced restate")
-    } finally {
-      spark.conf.unset(Lake.PathLazyMinFilesKey)
-      spark.conf.unset(Lake.CheckpointParquetMinEntriesKey)
-    }
-  }
-
-  test("a LEGACY unfiltered restate (raw AS line) replayed onto a path-lazy base validates against the entries — no resurrection") {
-    spark.conf.set(Lake.CheckpointParquetMinEntriesKey, "8")
-    spark.conf.set(Lake.PathLazyMinFilesKey, "1")
-    try {
-      val out = freshDir("lake-legacy-restate")
-      def batch(ids: Range, split: String) = spark.range(ids.start, ids.end).select(
-        col("id").as("doc_id"), concat(lit("doc "), col("id")).as("text"),
-        lit(split).as("split"))
-      Lake.init(spark, batch(0 until 100, "train")
-        .unionByName(batch(100000 until 100100, "test")), out, Seq("split"))   // v1
-      (1 to 9).foreach(i => Pipeline.appendToLake(spark, out,
-        batch(1000 * i until 1000 * i + 10, "train"),
-        partitionCols = Seq("split")))                                          // v2..v10 (cp)
-      Lake.invalidateStateCache()
-      val stale = Lake.latestManifest(spark, out).get
-      Pipeline.deleteFromLake(spark, out, Seq(5L).toDF("doc_id"), "doc_id",
-        partitionCols = Seq("split"), retainHistory = true)                     // v11
-      Lake.checkpointNow(spark, out) // the removal buries BELOW this cp
-      Lake.invalidateStateCache()
-      val st11 = Lake.latestManifest(spark, out).get
-      val live11 = st11.files.toSet
-      val r = stale.files.find(f => !live11(f)).get // dead below the new cp
-      // hand-write the v12 delta a PRE-FILTER build would have committed:
-      // a raw `AS` restate naming the dead file (no `ASF` producer filter)
-      def e(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-      val text = Seq(
-        s"graft-delta-v1\tanalyze\t${System.currentTimeMillis()}",
-        s"S\t${e(st11.schemaJson)}",
-        s"AS\t${e(r)}\t${e("text")}\t${e("a")}\t${e("b")}").mkString("\n")
-      java.nio.file.Files.write(java.nio.file.Paths.get(out,
-        Lake.LogDirName, f"v${12L}%020d.manifest"), text.getBytes("UTF-8"))
-      Lake.invalidateStateCache()
-      val st = Lake.latestManifest(spark, out).get
-      assert(st.files.isInstanceOf[Lake.DeferredFiles])
-      assert(!st.stats.contains(r),
-        "a legacy restate for a file dead below the checkpoint must drop at replay")
-      assert(Lake.read(spark, out).count() == 289L,
-        "the deleted row must stay deleted")
-      val kept = Lake.pruneByStats(st, "text",
-        org.apache.spark.sql.types.StringType, "a", "b")
-      assert(!kept.contains(r),
-        "the dead file must never come back as a prune survivor")
-      assert(Lake.reservedTotals(spark, st, st.files)._1.isDefined,
-        "whole-table pricing must not trip its torn check on the legacy restate")
     } finally {
       spark.conf.unset(Lake.PathLazyMinFilesKey)
       spark.conf.unset(Lake.CheckpointParquetMinEntriesKey)

@@ -62,6 +62,45 @@ class LogCompatSpec extends SparkTestBase {
       s"expected the descriptive unknown-tag error, got: ${e.getMessage}")
   }
 
+  test("a retired graft-checkpoint-v1 checkpoint refuses by name, not a silent fallback") {
+    val out = freshDir("compat-ckpt-v1")
+    writeLog(out, f"v${1L}%020d.manifest",
+      "graft-delta-v1\tappend\t0\t0\t0\t0\t0\t0\nS\t%7B%7D")
+    // what a pre-history-section build wrote: v1 header, no H lines
+    writeLog(out, f"v${1L}%020d.checkpoint",
+      "graft-checkpoint-v1\nS\t%7B%7D\nF\tsplit%3Dtrain%2Fpart-0.parquet")
+    val e = intercept[IllegalStateException] { Lake.latestManifest(spark, out) }
+    assert(e.getMessage.contains("graft-checkpoint-v1") &&
+      e.getMessage.contains("checkpoint at version 1"),
+      s"expected the named v1 refusal, got: ${e.getMessage}")
+  }
+
+  test("a retired legacy AS restate line refuses by name, not as a newer-build tag") {
+    val out = freshDir("compat-delta-as")
+    writeLog(out, f"v${1L}%020d.manifest",
+      "graft-delta-v1\tanalyze\t0\nS\t%7B%7D\nAS\tpart-0.parquet\ttext\ta\tb")
+    val e = intercept[IllegalStateException] { Lake.deltaAt(spark, out, 1L) }
+    assert(e.getMessage.contains("'AS'") &&
+      e.getMessage.contains("delta record at version 1"),
+      s"expected the named AS refusal, got: ${e.getMessage}")
+    assert(!e.getMessage.contains("newer"),
+      s"an AS line is OLDER than this build, not newer: ${e.getMessage}")
+  }
+
+  test("a zero-byte delta or checkpoint names the record kind and version, not head of empty list") {
+    val out = freshDir("compat-empty")
+    writeLog(out, f"v${1L}%020d.manifest", "")
+    val d = intercept[IllegalStateException] { Lake.deltaAt(spark, out, 1L) }
+    assert(d.getMessage.contains("delta record at version 1 is empty"),
+      s"expected the empty-delta error, got: ${d.getMessage}")
+    writeLog(out, f"v${1L}%020d.manifest",
+      "graft-delta-v1\tappend\t0\t0\t0\t0\t0\t0\nS\t%7B%7D")
+    writeLog(out, f"v${1L}%020d.checkpoint", "")
+    val c = intercept[IllegalStateException] { Lake.latestManifest(spark, out) }
+    assert(c.getMessage.contains("checkpoint at version 1 is empty"),
+      s"expected the empty-checkpoint error, got: ${c.getMessage}")
+  }
+
   test("a level-2 delta (VD lines) stamps mr=2 and replays fine on this build") {
     val out = freshDir("compat-mr2-roundtrip")
     val docs = spark.range(40).select(col("id").as("doc_id"),

@@ -15,15 +15,20 @@ import org.apache.spark.sql.functions._
   */
 object KVText {
 
-  /** Read `key value` lines into a (key, value) DataFrame. Lines without a
-    * space (no parseable key/value split — split_once returns nothing in
-    * the reference) are skipped rather than surfaced as empty-string rows. */
-  def read(spark: SparkSession, path: String): DataFrame =
+  /** Read `key value` lines into a (key, value) DataFrame, split at the
+    * first space like the reference's split_once(' ') and the `graft-kv`
+    * reader. Lines without a space (split_once returns nothing in the
+    * reference) or with an empty key are skipped rather than surfaced as
+    * empty-string rows. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val line = col("value")
+    val sp = instr(line, " ")
     spark.read.text(path)
-      .filter(col("value").rlike("^\\S+ "))
+      .filter(sp > 1)
       .select(
-        regexp_extract(col("value"), "^(\\S+) (.*)$", 1).as("key"),
-        regexp_extract(col("value"), "^(\\S+) (.*)$", 2).as("value"))
+        substring_index(line, " ", 1).as("key"),
+        line.substr(sp + 1, length(line)).as("value"))
+  }
 
   /** Write a 2-column DataFrame as `key value` lines. Null values write as
     * empty strings (round-tripping to ""); rows with null keys are dropped

@@ -23,4 +23,27 @@ class GraftSessionSpec extends org.scalatest.funsuite.AnyFunSuite {
       assert(Tables(s, "/root/testdata/sf0.001", "nation").count() == 25)
     } finally s.stop() // later suites' getOrCreate builds a fresh session
   }
+
+  test("spark.* system properties (spark-submit --conf) win over the engine defaults") {
+    SparkSession.getActiveSession.foreach(_.stop())
+    val props = Map("spark.sql.shuffle.partitions" -> "7", "spark.sql.session.timeZone" -> "America/New_York")
+    val saved = props.keys.map(k => k -> sys.props.get(k)).toMap
+    props.foreach { case (k, v) => sys.props(k) = v }
+    try {
+      val s = GraftSession.builder(4)
+        .config("spark.ui.enabled", "false")
+        .appName("graft-session-spec")
+        .getOrCreate()
+      try {
+        assert(s.conf.get("spark.sql.shuffle.partitions") == "7")
+        assert(s.conf.get("spark.sql.session.timeZone") == "America/New_York")
+        // keys the properties leave alone keep the engine default
+        assert(s.sparkContext.master == "local[4]")
+        assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+      } finally s.stop()
+    } finally saved.foreach {
+      case (k, Some(v)) => sys.props(k) = v
+      case (k, None) => sys.props -= k
+    }
+  }
 }

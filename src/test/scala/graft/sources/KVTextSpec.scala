@@ -26,6 +26,20 @@ class KVTextSpec extends SparkTestBase {
     assert(back == Set("k1" -> "v1", "k2" -> ""))
   }
 
+  test("reads the same rows as the graft-kv reader: split at the first space, whatever the key or value holds") {
+    val dir = Files.createTempDirectory("kvtext4").toString
+    // U+0085 and U+2028 are line terminators to java.util.regex's `.` but
+    // not to Spark's text reader; a tab is not a space
+    val lines = Seq("a x\u0085y", "b x\u2028y", "k\tx v", "c  lead", "d ", " nokey", "nospace", "e v w")
+    Files.write(java.nio.file.Paths.get(dir, "part-0"),
+      lines.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("key", "value").collect().map(r => r.getString(0) -> r.getString(1)).toSet
+    val text = rows(KVText.read(spark, dir))
+    assert(text == rows(spark.read.format("graft-kv").load(dir)))
+    assert(text == Set("a" -> "x\u0085y", "b" -> "x\u2028y", "k\tx" -> "v", "c" -> " lead", "d" -> "", "e" -> "v w"))
+  }
+
   test("wordcount over a KV sink matches direct counts (reference dataflow shape)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

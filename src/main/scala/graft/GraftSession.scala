@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.NioLocalFileSystem
 import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
@@ -18,6 +19,15 @@ import org.apache.spark.sql.SparkSession
   * generated classes is JVM-global, and it takes its size from the first
   * session that compiles code in the JVM: build this session before any
   * other, or the lake recompiles its classes on every commit.
+  *
+  * `fs.file.impl` defaults to [[graft.sources.NioLocalFileSystem]]: without
+  * `libhadoop`, Hadoop's own local FileSystem starts a `chmod` process for
+  * every file and directory the engine writes and an `ls -ld` for every
+  * listed file, and this class makes the same system calls in-process. A
+  * deployment's own `spark.hadoop.fs.file.impl` wins like any other key.
+  * Hadoop caches one `file:` FileSystem per JVM and user, made with the
+  * configuration of whoever asks first, so the default holds only if this
+  * session's configuration is the first to ask for it.
   */
 object GraftSession {
 
@@ -52,7 +62,9 @@ object GraftSession {
       // 4 vCPUs, lake_dml, 8 s runs, 12 same-seed pairs: cpu_s 42.0 ->
       // 32.3 s and wall_s 18.0 -> 14.6 s (medians, 12/12 wins each);
       // compiles per whole run 300-540 -> 141, flat in episode count.
-      "spark.sql.codegen.cache.maxEntries" -> "1024")
+      "spark.sql.codegen.cache.maxEntries" -> "1024",
+      // see the scaladoc; a whole lake_dml benchmark run forks 962 -> 0
+      "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName)
     val given = new SparkConf()
     SparkSession.builder()
       // the engine's SQL surface: native expressions (graft_dot, …) and

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference engine's wire format: line-oriented `key value\n` text
@@ -32,11 +32,23 @@ object KVText {
 
   /** Write a 2-column DataFrame as `key value` lines. Null values write as
     * empty strings (round-tripping to ""); rows with null keys are dropped
-    * (the line format cannot represent them). */
+    * (the line format cannot represent them). A row that would read back
+    * as different data fails the write, as in the `graft-kv` writer: an
+    * empty key, a key holding a space, or a line break (`\n` or `\r`, both
+    * of which Spark's text reader splits on) in either field. */
   def write(df: DataFrame, path: String): Unit = {
     val Array(k, v) = df.columns
-    df.filter(col(k).isNotNull)
-      .select(concat_ws(" ", col(k).cast("string"), coalesce(col(v).cast("string"), lit(""))).as("value"))
+    val key = col(k).cast("string")
+    val value = coalesce(col(v).cast("string"), lit(""))
+    def breaks(c: Column) = c.contains("\n") || c.contains("\r")
+    df.filter(key.isNotNull)
+      .select(
+        when(key === "" || key.contains(" ") || breaks(key),
+          raise_error(concat(lit("KVText cannot represent key '"), key.substr(1, 40),
+            lit("': keys must be non-empty with no spaces or line breaks (split_once-parse format)"))))
+          .when(breaks(value),
+            raise_error(lit("KVText cannot represent line breaks in values (line-oriented format)")))
+          .otherwise(concat_ws(" ", key, value)).as("value"))
       .write.mode("overwrite").text(path)
   }
 }

@@ -792,6 +792,7 @@ class LakeSpec extends SparkTestBase {
     assert(Lake.versionAtTimestamp(spark, out, ts - 1L) == 1L)
     val hist = Lake.describeHistory(spark, out).collect()
     val bytesRead = stats.getLong("bytesRead") - before
+    assert(bytesRead > 0, "the local-fs byte counter must move, or the bound below shows nothing")
     assert(bytesRead < fatLen / 4,
       s"header-resolved lookups read $bytesRead bytes against a $fatLen-byte delta — " +
         "they must stay O(header)")
@@ -1065,6 +1066,7 @@ class LakeSpec extends SparkTestBase {
     val before = stats.getLong("bytesRead")
     Pipeline.deleteFromLakeSparseWhere(spark, out, col("doc_id") >= lit(7500L))
     val readBytes = stats.getLong("bytesRead") - before
+    assert(readBytes > 0, "the local-fs byte counter must move, or the bound below shows nothing")
     assert(readBytes < dataBytes / 2,
       s"a pruned range purge read $readBytes bytes against a $dataBytes-byte lake — " +
         "it must scan only the overlapping files")

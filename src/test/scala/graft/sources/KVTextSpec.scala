@@ -26,6 +26,27 @@ class KVTextSpec extends SparkTestBase {
     assert(back == Set("k1" -> "v1", "k2" -> ""))
   }
 
+  // Rows the line format cannot carry: each would read back as different
+  // data ("a b" -> ("a", "b c"); line breaks become extra lines, since
+  // Spark's text reader splits on both; an empty key is dropped on read)
+  Seq(
+    ("an empty key", "", "v", "key"),
+    ("a key holding a space", "a b", "c", "key"),
+    ("a key holding \\n", "a\nb", "c", "key"),
+    ("a key holding \\r", "a\rb", "c", "key"),
+    ("a value holding \\n", "k", "x\ny", "line breaks in values"),
+    ("a value holding \\r", "k", "x\ry", "line breaks in values")
+  ).foreach { case (shape, k, v, what) =>
+    test(s"write refuses $shape instead of writing a line that reads back differently") {
+      import spark.implicits._
+      val dir = Files.createTempDirectory("kvtext5").toString + "/out"
+      val e = intercept[Exception](KVText.write(Seq(("ok", "1"), (k, v)).toDF("key", "value"), dir))
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(messages.exists(m => m != null && m.contains(s"KVText cannot represent $what")),
+        s"unexpected failure: $e")
+    }
+  }
+
   test("reads the same rows as the graft-kv reader: split at the first space, whatever the key or value holds") {
     val dir = Files.createTempDirectory("kvtext4").toString
     // U+0085 and U+2028 are line terminators to java.util.regex's `.` but

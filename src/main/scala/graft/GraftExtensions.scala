@@ -32,8 +32,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectResolutionRule(session =>
       new org.apache.spark.sql.graft.ResolveLakeMerge(session))
     // DSv2 reads of a DV-bearing or column-mapped lake version re-plan
-    // onto Lake.read's vectorized anti-join (merge-on-read without the
-    // row-mode scan or the driver-side position cap)
+    // onto Lake.read's vectorized scan with its in-scan DV predicate
+    // (merge-on-read without the row-mode scan or the driver-side
+    // position cap)
     e.injectResolutionRule(session =>
       new org.apache.spark.sql.graft.VectorizeLakeMorRead(session))
   }

@@ -4,7 +4,7 @@ import java.net.{URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{functions, DataFrame, SparkSession}
+import org.apache.spark.sql.{functions, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, count, date_format, hash, lit, max, min, pmod, substring}
 import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
@@ -72,8 +72,9 @@ object Lake {
     * lake file `file` is deleted". Merge-on-read row tombstones in the
     * Delta Lake deletion-vector sense (Armbrust et al., VLDB 2020 +
     * the public DV design): a sparse delete/merge commits positions, not
-    * rewritten survivor files, and reads apply them as an anti-join on
-    * `(_metadata.file_path, _metadata.row_index)`. [[compactLake]]
+    * rewritten survivor files, and reads apply them inside the scan as a
+    * per-file row mask over `(_metadata.file_path, _metadata.row_index)`
+    * ([[graft.plans.LakeDvKeep]]). [[compactLake]]
     * materializes them back into plain files. */
   val DvDirName = "_graft_dv"
 
@@ -2914,7 +2915,7 @@ object Lake {
       // manifest-stat file skipping at the FileIndex grain: the data
       // filters Spark pushes at PLAN time prune whole files against the
       // per-file min/max the log recorded — the same skip the DSv2 scan
-      // builder does, now on the anti-join (merge-on-read) plan too.
+      // builder does, now on the merge-on-read plan too.
       // Filters arrive over the PHYSICAL scan schema, so bounds build
       // and match in physical names end to end.
       val prune: Option[Seq[org.apache.spark.sql.catalyst.expressions.Expression] => Option[Set[String]]] =
@@ -2945,14 +2946,14 @@ object Lake {
           case fl => val inRead = fl.toSet; m.view.filterKeys(inRead).toMap
         }
       // DV application strategy, chosen WITHOUT forcing a deferred
-      // attachment map: eager (or already-soft-cached) maps keep the
-      // driver-built absMap below — bounded by the dv-lazy threshold.
-      // A deferred map under a BOUNDED read (sparse DML's candidates)
-      // resolves through the scoped accessor — one membership job, and
-      // only the relevant files' sidecars are read. `None` = deferred
-      // map under a WHOLE-TABLE read: relevance resolves INSIDE a job
-      // over the checkpoint entries instead (further down) — the one
-      // shape whose relevant set is itself corpus-scale.
+      // attachment map: eager (or already-soft-cached) maps apply inside
+      // the scan below — bounded by the dv-lazy threshold. A deferred map
+      // under a BOUNDED read (sparse DML's candidates) resolves through
+      // the scoped accessor — one membership job, and only the relevant
+      // files' attachments reach the driver. `None` = deferred map under
+      // a WHOLE-TABLE read: relevance resolves INSIDE a job over the
+      // checkpoint entries instead (further down) — the one shape whose
+      // relevant set is itself corpus-scale.
       val eagerRelevant: Option[Map[String, Seq[String]]] = dvs match {
         case dd: DeferredDvs =>
           if (dd.cheapIsEmpty.contains(true)) Some(Map.empty)
@@ -2964,26 +2965,14 @@ object Lake {
       }
       val applied = eagerRelevant match {
         case Some(relevant) =>
-          val unioned = readGrouped(spark, root, physical, files, prune,
-            withLineage = relevant.nonEmpty)
-          if (relevant.isEmpty) unioned
-          else {
-            import spark.implicits._
-            val sidecars = relevant.values.flatten.toSeq.distinct.sorted
-            val dvDf = spark.read.schema(DvSchema)
-              .parquet(sidecars.map(sc => new Path(root, sc).toString): _*)
-            // driver-built (relative → as-the-scan-renders-it absolute)
-            // map for exactly the DV'd files: bounded by the attachment
-            // count; the inner join drops sidecar rows for files outside
-            // this read. The anti-join is left unhinted: a sparse
-            // delete's DV set is small and AQE broadcasts it.
-            val absMap = relevant.keysIterator
-              .map(f => (f, new Path(root, f).toString)).toSeq.toDF("file", "_gf_path")
-            val del = dvDf.join(absMap, "file")
-              .select(col("_gf_path"), col("pos").as("_gf_pos"))
-            unioned.join(del, Seq("_gf_path", "_gf_pos"), "left_anti")
-              .drop("_gf_path", "_gf_pos")
-          }
+          // the vectors apply INSIDE the scan ([[graft.plans.LakeDvKeep]]):
+          // each task loads a DV'd file's positions from that file's own
+          // sidecars when it reaches the file — one columnar scan, no
+          // sidecar read on the driver, no join
+          val keep =
+            if (relevant.isEmpty) None
+            else Some(dvKeep(scanFiles(spark, root, relevant.iterator)))
+          readGrouped(spark, root, physical, files, prune, keep)
         case None =>
           // DEFERRED attachment map: driver traffic is O(distinct
           // sidecars) — one bounded collect for the sidecar read paths —
@@ -2992,22 +2981,26 @@ object Lake {
           // V rows and joined to the sidecar rows job-side. The
           // filesForScan shape, extended to MoR planning: a fully
           // sparse-deleted 10^8-file lake plans its read without the
-          // attachment map ever landing on the driver.
+          // attachment map ever landing on the driver. This is the one
+          // read that still applies vectors as a job-side anti-join: the
+          // in-scan predicate carries its per-file attachments in the
+          // plan, and here they must never reach the driver.
           val dd = dvs.asInstanceOf[DeferredDvs]
           val sidecars = distinctLiveSidecars(spark, dd).toSeq.sorted
           if (sidecars.isEmpty)
-            readGrouped(spark, root, physical, files, prune, withLineage = false)
+            readGrouped(spark, root, physical, files, prune)
           else {
             import spark.implicits._
             val unioned = readGrouped(spark, root, physical, files, prune,
-              withLineage = true)
+              lineage = Seq(col("_metadata.file_path").as("_gf_path"),
+                col("_metadata.row_index").as("_gf_pos")))
             val dvDf = spark.read.schema(DvSchema)
               .parquet(sidecars.map(sc => new Path(root, sc).toString): _*)
             val rootStr = root.toString
             // whole-table read (the only shape that reaches here): every
             // live pair's file is live in the read by invariant
             val relevantDf = dvPairsRdd(spark, dd).keys.distinct()
-              .map(f => (f, new Path(rootStr, f).toString))
+              .map(f => (f, new Path(rootStr, f).toUri.toString))
               .toDF("file", "_gf_path")
             val del = dvDf.join(relevantDf, "file")
               .select(col("_gf_path"), col("pos").as("_gf_pos"))
@@ -3024,13 +3017,15 @@ object Lake {
     * partition discovery needs each read internally uniform. A
     * generation's former partition columns read from its paths, the
     * current one's from footers — the same logical schema either way
-    * (column order pinned to `physical`). `withLineage` appends the
-    * `(_gf_path, _gf_pos)` row coordinates, attached PER GENERATION
-    * (metadata columns do not resolve through a union). */
+    * (column order pinned to `physical`). `keep` (the in-scan
+    * deletion-vector predicate) filters and `lineage` columns append,
+    * both over `_metadata`, PER GENERATION (metadata columns do not
+    * resolve through a union). */
   private def readGrouped(spark: SparkSession, root: Path, physical: StructType,
       files: Seq[String],
       prune: Option[Seq[org.apache.spark.sql.catalyst.expressions.Expression] => Option[Set[String]]],
-      withLineage: Boolean): DataFrame = {
+      keep: Option[Column] = None,
+      lineage: Seq[Column] = Seq.empty): DataFrame = {
     val generations = files.groupBy(layoutOfPath).toSeq.sortBy(_._1.mkString(","))
     val frames = generations.map { case (levels, gen) =>
       val reader = spark.read.option("basePath", root.toString)
@@ -3050,58 +3045,68 @@ object Lake {
       // job above the parallel-discovery threshold, repeated for every
       // read of a multi-commit query — is pure waste; only the FIRST
       // sight of a path pays the (distributed, scale-correct) listing
-      val raw =
+      val listed =
         if (physical.nonEmpty)
           org.apache.spark.sql.graft.LakeListing.parquetFrame(spark,
             gen.map(f => new Path(root, f).toString), readSchema,
             Map("basePath" -> root.toString))
         else reader.parquet(gen.map(f => new Path(root, f).toString): _*)
+      val raw = keep.fold(listed)(listed.filter)
       // an empty `physical` (schema-less bootstrap reads) keeps the
       // inferred columns — projecting an explicit empty list would
       // select nothing
-      val lineageCols = if (withLineage)
-        Seq(col("_metadata.file_path").as("_gf_path"),
-          col("_metadata.row_index").as("_gf_pos"))
-      else Seq.empty
       val projected =
-        if (physical.isEmpty && lineageCols.isEmpty) raw
-        else if (physical.isEmpty) raw.select(col("*") +: lineageCols: _*)
-        else raw.select(physical.fieldNames.toSeq.map(col) ++ lineageCols: _*)
+        if (physical.isEmpty && lineage.isEmpty) raw
+        else if (physical.isEmpty) raw.select(col("*") +: lineage: _*)
+        else raw.select(physical.fieldNames.toSeq.map(col) ++ lineage: _*)
       prune.fold(projected)(pr =>
         org.apache.spark.sql.graft.LakeVectorRead.withStatPruning(projected, pr))
     }
     frames.reduce(_.unionByName(_))
   }
 
+  /** The read's scoped file map for the in-scan expressions: each
+    * `(relative file, its sidecars)` keyed by the absolute path as the
+    * parquet scan renders `_metadata.file_path`. */
+  private def scanFiles(spark: SparkSession, root: Path,
+      files: Iterator[(String, Seq[String])]): graft.plans.LakeScanFiles =
+    graft.plans.LakeScanFiles(
+      files.map { case (f, scs) =>
+        new Path(root, f).toUri.toString -> graft.plans.LakeScanFiles.Entry(f,
+          scs.map(sc => new Path(root, sc).toString))
+      }.toMap,
+      // the session's own Hadoop keys (`spark.*` keys are Spark's)
+      spark.conf.getAll.filter { case (k, _) => !k.startsWith("spark.") })
+
+  private def dvKeep(m: graft.plans.LakeScanFiles): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(graft.plans.LakeDvKeep(
+      org.apache.spark.sql.graft.ColumnBridge.expression(col("_metadata.file_path")),
+      org.apache.spark.sql.graft.ColumnBridge.expression(col("_metadata.row_index")), m))
+
   /** Read `files` with per-row LINEAGE attached: `_gf_file` (the
     * lakeDir-relative path) and `_gf_pos` (the row's position in that
     * file) — the coordinates a deletion vector records. Existing DVs are
-    * applied first, so an already-deleted row can never be re-tombstoned
-    * or re-counted by a later sparse mutation. */
+    * applied first, inside the scan, so an already-deleted row can never
+    * be re-tombstoned or re-counted by a later sparse mutation. Both the
+    * DV predicate and `_gf_file` read the same scoped file map: one
+    * scan, no join. */
   private[graft] def readFilesWithLineage(spark: SparkSession, lakeDir: String,
       schemaJson: String, files: Seq[String],
       dvs: Map[String, Seq[String]]): DataFrame = {
-    import spark.implicits._
     require(files.nonEmpty, "lineage read needs a non-empty file list")
     val (_, root) = fsRoot(spark, lakeDir)
     val schema = visible(DataType.fromJson(schemaJson).asInstanceOf[StructType])
-    val base = readGrouped(spark, root, toPhysical(schema), files,
-      prune = None, withLineage = true)
-    val relMap = files.map(f => (new Path(root, f).toString, f)).toDF("_gf_path", "_gf_file")
-    val withRel = base.join(broadcast(relMap), "_gf_path").drop("_gf_path")
     // callers pass bounded candidate lists (sparse DML's affected
     // files), so the scoped accessor keeps a deferred map off the driver
     val relevant = dvsFor(spark, dvs, files)
-    val antiJoined =
-      if (relevant.isEmpty) withRel
-      else {
-        val sidecars = relevant.values.flatten.toSeq.distinct.sorted
-        val dvDf = spark.read.schema(DvSchema)
-          .parquet(sidecars.map(s => new Path(root, s).toString): _*)
-        withRel.join(dvDf.select(col("file").as("_gf_file"), col("pos").as("_gf_pos")),
-          Seq("_gf_file", "_gf_pos"), "left_anti")
-      }
-    if (hasMapping(schema)) toLogical(antiJoined, schema) else antiJoined
+    val m = scanFiles(spark, root,
+      files.iterator.map(f => f -> relevant.getOrElse(f, Seq.empty)))
+    val relFile = org.apache.spark.sql.graft.ColumnBridge.column(graft.plans.LakeScanFile(
+      org.apache.spark.sql.graft.ColumnBridge.expression(col("_metadata.file_path")), m))
+    val lineage = readGrouped(spark, root, toPhysical(schema), files, prune = None,
+      keep = if (relevant.isEmpty) None else Some(dvKeep(m)),
+      lineage = Seq(relFile.as("_gf_file"), col("_metadata.row_index").as("_gf_pos")))
+    if (hasMapping(schema)) toLogical(lineage, schema) else lineage
   }
 
   private[graft] def readState(spark: SparkSession, lakeDir: String, st: LakeState): DataFrame =
@@ -3112,8 +3117,10 @@ object Lake {
     * vectorized merge-on-read rule
     * ([[org.apache.spark.sql.graft.VectorizeLakeMorRead]]) routes the
     * DSv2 read surfaces through this plan: a fully vectorized parquet
-    * scan with manifest-stat file skipping, deletion vectors applied as
-    * the executor-side anti-join — no driver-side position load or cap. */
+    * scan with manifest-stat file skipping, deletion vectors applied
+    * inside it by [[graft.plans.LakeDvKeep]], which loads each file's
+    * positions in the task that reads the file — no join, no driver-side
+    * position load or cap. */
   def readResolved(spark: SparkSession, lakeDir: String, st: LakeState): DataFrame =
     readState(spark, lakeDir, st)
 

@@ -1827,9 +1827,9 @@ object Pipeline {
     * point at 100 TB: a right-to-be-forgotten pass touching 0.1% of rows
     * spread across every partition writes O(deleted rows) sidecar bytes
     * here, versus a rewrite of essentially the whole lake there. Reads
-    * apply the vectors as an anti-join on the scan's own row lineage
-    * ([[Lake.readFiles]]); [[compactLake]] materializes them back into
-    * plain files and drops the attachments.
+    * apply the vectors inside the scan, per file, on the scan's own row
+    * lineage ([[Lake.readFiles]]); [[compactLake]] materializes them back
+    * into plain files and drops the attachments.
     *
     * Same commit discipline as every mutation: stage (the sidecar write,
     * invisible until publish), audit (sidecar read-back count vs the
@@ -2436,7 +2436,7 @@ object Pipeline {
     * and `n_added == upsert files` via describeHistory), the upserts
     * land as data files, reads apply the vectors merge-on-read. The
     * oracle recomputes the post-merge corpus relationally, so a single
-    * hash-match certifies the whole MoR read path: lineage anti-join,
+    * hash-match certifies the whole MoR read path: in-scan DV predicate,
     * attachment resolution through the manifest, upsert visibility. */
   private def px113(spark: SparkSession, dir: String): DataFrame = {
     val out = Scratch.dir(spark, "px113_lake")
@@ -2686,11 +2686,19 @@ object Pipeline {
     * skips from the manifest alone; LakeSinkSpec pins the replay).
     * The post-stream manifest must equal the full corpus (px100's
     * oracle): every batch landed, exactly once, through the same
-    * stage→audit→publish commit as every batch mutation. */
+    * stage→audit→publish commit as every batch mutation. Each run
+    * starts a fresh stream: the source and checkpoint directories are
+    * removed first, because a checkpoint's file-source log names its
+    * files by absolute path and would resume a stream over another
+    * run's (or another tree's) files. */
   private def px120(spark: SparkSession, dir: String): DataFrame = {
     val out = Scratch.dir(spark, "px120_lake")
     val src = Scratch.dir(spark, "px120_src")
     val ckpt = Scratch.dir(spark, "px120_ckpt")
+    Seq(src, ckpt).foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    }
     val sharded = hashSplit(Tables(spark, dir, "documents"), "doc_id")
       .withColumn("shard_id", (col("doc_id") % 4).cast("int"))
     Lake.init(spark, sharded.filter(col("doc_id") % 3 === 0), out, Seq("split", "shard_id"))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.FileNotFoundException
+import java.io.{FileNotFoundException, UncheckedIOException}
 import java.net.URI
 import java.nio.file.{FileSystems, Files, LinkOption, NoSuchFileException}
 import java.nio.file.attribute.{GroupPrincipal, UserPrincipal}
@@ -48,22 +48,47 @@ object NioLocalFileSystem {
       else existing(p)(Files.setAttribute(pathToFile(p).toPath, "unix:mode",
         Int.box(permission.toShort & PermissionBits)))
 
-    /** The stock status with permission, owner and group filled in from one
-      * `lstat`, as `ls -ld` reports them; the stock status loads them
-      * lazily by forking that `ls`. */
+    /** The stock status, whose permission, owner and group load from one
+      * `lstat` on first read, as `ls -ld` reports them; the stock status
+      * loads them lazily too, by forking that `ls`. Callers that never read
+      * them (Spark's file listings, parquet's input files) pay nothing. A
+      * missing path still throws `FileNotFoundException` here, so
+      * `listStatus` skips a file that vanishes while it lists. */
     override def getFileStatus(f: Path): FileStatus = {
       val st = super.getFileStatus(f)
-      if (!unixView) st
-      else {
-        val a = existing(f)(Files.readAttributes(pathToFile(f).toPath, "unix:mode,owner,group",
-          LinkOption.NOFOLLOW_LINKS))
-        new FileStatus(st.getLen, st.isDirectory, st.getReplication, st.getBlockSize,
-          st.getModificationTime, st.getAccessTime,
-          new FsPermission((a.get("mode").asInstanceOf[Int] & PermissionBits).toShort),
-          a.get("owner").asInstanceOf[UserPrincipal].getName,
-          a.get("group").asInstanceOf[GroupPrincipal].getName, st.getPath)
+      if (!unixView) st else new LazyStatus(st, pathToFile(f).toPath)
+    }
+  }
+
+  private final class LazyStatus(st: FileStatus, file: java.nio.file.Path)
+      extends FileStatus(st.getLen, st.isDirectory, st.getReplication, st.getBlockSize,
+        st.getModificationTime, st.getAccessTime, null, null, null, st.getPath) {
+    @volatile private var loaded = false
+
+    /** A file removed since its status was taken fails the read, like the
+      * stock status's `ls`, naming the path. */
+    private def load(): Unit = if (!loaded) synchronized {
+      if (!loaded) {
+        val a =
+          try existing(getPath)(Files.readAttributes(file, "unix:mode,owner,group",
+            LinkOption.NOFOLLOW_LINKS))
+          catch { case e: FileNotFoundException => throw new UncheckedIOException(e) }
+        setPermission(new FsPermission((a.get("mode").asInstanceOf[Int] & PermissionBits).toShort))
+        setOwner(a.get("owner").asInstanceOf[UserPrincipal].getName)
+        setGroup(a.get("group").asInstanceOf[GroupPrincipal].getName)
+        loaded = true
       }
     }
+
+    override def getPermission: FsPermission = { load(); super.getPermission }
+    override def getOwner: String = { load(); super.getOwner }
+    override def getGroup: String = { load(); super.getGroup }
+    override def write(out: java.io.DataOutput): Unit = { load(); super.write(out) }
+    // Java serialization writes the superclass's fields directly: ship a
+    // loaded plain status instead
+    private def writeReplace(): AnyRef =
+      new FileStatus(getLen, isDirectory, getReplication, getBlockSize,
+        getModificationTime, getAccessTime, getPermission, getOwner, getGroup, getPath)
   }
 
   /** A file removed under us surfaces as Hadoop's `FileNotFoundException`. */

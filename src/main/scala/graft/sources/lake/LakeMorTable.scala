@@ -20,9 +20,10 @@ import graft.operators.Lake
 /** MERGE-ON-READ batch scan for a DV-bearing lake version — since the
   * vectorized re-plan landed, the FALLBACK read surface: sessions built
   * with the graft extensions re-plan any read of this table onto
-  * `Lake.read`'s vectorized anti-join
+  * `Lake.read`'s vectorized scan
   * ([[org.apache.spark.sql.graft.VectorizeLakeMorRead]] — columnar
-  * decode, no driver position load or cap), so this scan executes only
+  * decode, vectors applied per file inside the scan, no driver position
+  * load or cap), so this scan executes only
   * for sessions WITHOUT the extensions. The table itself remains the
   * DSv2 write/DML surface for DV-bearing and column-mapped versions
   * (append builder, SQL DELETE via [[LakeDeletes]], the MERGE/UPDATE
@@ -49,8 +50,8 @@ import graft.operators.Lake
   * position set before broadcasting, capped at
   * `spark.graft.lake.morMaxPositions` (default 20M) with a loud
   * refusal pointing at `compactLake` — a tombstone set that size
-  * should have been materialized, and `Lake.read`'s executor-side
-  * anti-join has no such ceiling. */
+  * should have been materialized, and `Lake.read`'s in-scan vectors,
+  * loaded per file in the tasks, have no such ceiling. */
 object LakeMorTable {
   val MaxPositionsConf = "spark.graft.lake.morMaxPositions"
   val DefaultMaxPositions = 20000000L
@@ -76,7 +77,7 @@ object LakeMorTable {
       throw new UnsupportedOperationException(
         s"graft-lake: version ${st.version} carries over $cap deletion-vector positions " +
           s"(cap via $MaxPositionsConf) — a tombstone set this large should be " +
-          "materialized: run compactLake, or read via Lake.read (its anti-join scales)")
+          "materialized: run compactLake, or read via Lake.read (its in-scan vectors scale)")
     rows.groupBy(_.getString(0)).map { case (f, rs) =>
       f -> rs.map(_.getLong(1)).sorted
     }

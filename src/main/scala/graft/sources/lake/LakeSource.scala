@@ -173,7 +173,7 @@ class LakeSource extends TableProvider with DataSourceRegister
     // (column-mapped) lake (physical parquet names need aliasing back to
     // logical). Both resolve through [[LakeMorTable]] — whose READS the
     // injected rule ([[org.apache.spark.sql.graft.VectorizeLakeMorRead]])
-    // re-plans onto Lake.read's vectorized anti-join; the table's own
+    // re-plans onto Lake.read's vectorized scan; the table's own
     // row-mode scan serves extension-less sessions, and its write/DML
     // builders serve everyone.
     val resolvedSchema = DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
@@ -183,7 +183,7 @@ class LakeSource extends TableProvider with DataSourceRegister
     // generation-grouped union (which the injected rule plans) does not
     // `dvMaybeNonEmpty` never forces a DEFERRED attachment map: an
     // ambiguous answer routes to the MoR table, whose reads the injected
-    // rule re-plans onto the vectorized anti-join either way — a false
+    // rule re-plans onto the vectorized scan either way — a false
     // positive costs nothing on a clean lake beyond taking that route
     if (graft.operators.Lake.dvMaybeNonEmpty(st.dvs) ||
         graft.operators.Lake.hasMapping(resolvedSchema) ||
@@ -233,7 +233,7 @@ trait GraftLakeTable {
   /** True when this table's OWN DSv2 scan would run in row mode (a
     * DV-bearing or column-mapped resolved version) — the signal the
     * injected [[org.apache.spark.sql.graft.VectorizeLakeMorRead]] rule
-    * matches to swap the read for `Lake.read`'s vectorized anti-join
+    * matches to swap the read for `Lake.read`'s vectorized scan
     * plan. The row-mode scan remains the fallback for sessions built
     * without the graft extensions. */
   def lakeRowModeScan: Boolean = false

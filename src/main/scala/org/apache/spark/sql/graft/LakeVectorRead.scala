@@ -17,7 +17,7 @@ import graft.sources.lake.GraftLakeTable
   * `FileSourceScanExec` hands to `listFiles` at planning time
   * additionally prune WHOLE FILES against the per-file column min/max
   * the delta log recorded at audit time. This is what lets the
-  * anti-join (merge-on-read) read path keep BOTH the vectorized parquet
+  * merge-on-read path keep BOTH the vectorized parquet
   * decode and the driver-side file skipping the DSv2 scan builder
   * provides on the clean path — pruning is delegated through `prune`
   * (built in [[graft.operators.Lake.readFiles]], where the manifest
@@ -25,9 +25,10 @@ import graft.sources.lake.GraftLakeTable
   *
   * Whole-file pruning is sound under position-based deletion vectors:
   * dropping a file never disturbs row positions inside the survivors,
-  * and the DV anti-join keys on `(file, pos)` of the surviving files
-  * only. `prune` returning `None` (no usable bounds) keeps every file —
-  * pruning only ever gets weaker, never wrong. */
+  * and the in-scan DV predicate ([[graft.plans.LakeDvKeep]]) keys on
+  * `(file, pos)` of the surviving files only. `prune` returning `None`
+  * (no usable bounds) keeps every file — pruning only ever gets
+  * weaker, never wrong. */
 private[sql] class LakeStatFileIndex(
     inner: FileIndex,
     prune: Seq[Expression] => Option[Set[String]])
@@ -76,14 +77,15 @@ object LakeVectorRead {
 /** Vectorized MERGE-ON-READ for the DSv2 read surfaces: replaces a
   * read-position [[DataSourceV2Relation]] over a row-mode lake table
   * (DV-bearing or column-mapped version — [[GraftLakeTable.lakeRowModeScan]])
-  * with [[graft.operators.Lake]]'s own anti-join read plan, during
-  * analysis. The format string, the named catalog and SQL views then
-  * all read through the SAME plan `Lake.read` produces: a fully
-  * VECTORIZED parquet scan (manifest-stat file skipping included, via
-  * [[LakeStatFileIndex]]) with the deletion vectors applied as an
-  * executor-side anti-join on `(_metadata.file_path, row_index)` — no
-  * driver-side position load, no position cap, whole-stage codegen
-  * intact. The table's own row-mode scan ([[graft.sources.lake
+  * with [[graft.operators.Lake]]'s own read plan, during analysis. The
+  * format string, the named catalog and SQL views then all read through
+  * the SAME plan `Lake.read` produces: a fully VECTORIZED parquet scan
+  * (manifest-stat file skipping included, via [[LakeStatFileIndex]])
+  * with the deletion vectors applied inside it by a predicate over
+  * `(_metadata.file_path, row_index)` ([[graft.plans.LakeDvKeep]]),
+  * which loads each file's positions in the task that reads the file —
+  * no join, no driver-side position load, no position cap, whole-stage
+  * codegen intact. The table's own row-mode scan ([[graft.sources.lake
   * .LakeMorTable]]) remains as the fallback for sessions built without
   * the graft extensions.
   *

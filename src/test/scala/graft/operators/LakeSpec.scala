@@ -866,9 +866,9 @@ class LakeSpec extends SparkTestBase {
       (0L until 40L).toSet -- Set(0L, 7L, 13L),
       "the format-string read must apply the deletion vectors")
     // the driver-side position cap does NOT bind this path: the
-    // vectorized anti-join read has no driver position load to cap (the
-    // cap still governs the no-extensions fallback scan and the CDC
-    // restore load)
+    // vectorized read loads positions per file inside its tasks, so
+    // there is no driver position load to cap (the cap still governs
+    // the no-extensions fallback scan and the CDC restore load)
     spark.conf.set(graft.sources.lake.LakeMorTable.MaxPositionsConf, "1")
     try assert(ids(spark.read.format("graft-lake").load(out)) ==
       (0L until 40L).toSet -- Set(0L, 7L, 13L),
@@ -1913,7 +1913,7 @@ class LakeSpec extends SparkTestBase {
     assert(Lake.stateAt(spark, out, 2L).stats == st.stats)
   }
 
-  test("vectorized merge-on-read: DSv2 reads plan a columnar scan + anti-join, stat-prune files, serve mapped lakes") {
+  test("vectorized merge-on-read: DSv2 reads plan one columnar scan with the in-scan DV predicate, stat-prune files, serve mapped lakes") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     def allNodes(p: SparkPlan): Seq[SparkPlan] = {
       val expanded = p match {
@@ -1933,7 +1933,8 @@ class LakeSpec extends SparkTestBase {
     val rows = df.collect()
     assert(rows.map(_.getAs[Long]("doc_id")).toSet == (0L until 40L).toSet -- Set(5L, 32L))
     // plan shape: Spark's own VECTORIZED parquet scan with the vectors
-    // applied as a left-anti join — never the row-mode MoR scan
+    // applied by the in-scan DV predicate — no join, and never the
+    // row-mode MoR scan
     val nodes = allNodes(df.queryExecution.executedPlan)
     val dataScans = nodes.collect {
       case sc: FileSourceScanExec if sc.output.exists(_.name == "text") => sc }
@@ -1941,11 +1942,15 @@ class LakeSpec extends SparkTestBase {
       s"the data scan must be the vectorized parquet scan, got:\n${df.queryExecution.executedPlan}")
     assert(!df.queryExecution.executedPlan.toString.contains("graft-lake MoR"),
       "the row-mode MoR scan must not plan when the graft extensions are installed")
-    assert(df.queryExecution.optimizedPlan.exists {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
-        j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti
+    assert(!df.queryExecution.optimizedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
+      s"the deletion vectors must apply inside the scan, with no join:\n${df.queryExecution.optimizedPlan}")
+    assert(nodes.exists {
+      case f: org.apache.spark.sql.execution.FilterExec =>
+        f.condition.exists(_.isInstanceOf[graft.plans.LakeDvKeep]) &&
+          f.child.exists(c => dataScans.exists(_ eq c))
       case _ => false
-    }, "the deletion vectors must apply as an executor-side anti-join")
+    }, s"the in-scan DV predicate must filter the data scan:\n${df.queryExecution.executedPlan}")
 
     // manifest-stat file skipping holds at the FileIndex grain: a
     // selective range opens ONE of the four doc_id-clustered files

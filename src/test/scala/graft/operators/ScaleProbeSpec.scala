@@ -254,10 +254,11 @@ class ScaleProbeSpec extends SparkTestBase {
     * version carrying >20M deletion-vector positions (the driver-side
     * cap of the no-extensions fallback scan) reads through
     * `spark.read.format("graft-lake")` because the injected rule plans
-    * the executor-side anti-join — no driver position load exists to
-    * cap. The probe pins the cap conf at 1 to PROVE the read never
-    * consults it. */
-  test("MoR format read survives >20M deletion-vector positions via the vectorized anti-join") {
+    * the in-scan DV predicate — each task loads a file's positions from
+    * that file's sidecars, so no driver position load exists to cap.
+    * The probe pins the cap conf at 1 to PROVE the read never consults
+    * it. */
+  test("MoR format read survives >20M deletion-vector positions via the in-scan DV predicate") {
     assume(sys.env.get("GRAFT_SCALE").contains("1"), "set GRAFT_SCALE=1 to run")
     val out = java.nio.file.Files.createTempDirectory("morscale").toString + "/lake"
     val n = 26000000L

@@ -76,6 +76,50 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     } finally nio.close()
   }
 
+  /** `ls -ld`'s permission string (without the type letter), owner and group. */
+  private def lsLd(p: Path): (String, String, String) = {
+    val proc = new ProcessBuilder("ls", "-ld", new java.io.File(p.toUri).getPath).start()
+    val line = new String(proc.getInputStream.readAllBytes(), "UTF-8").trim
+    assert(proc.waitFor() == 0, s"ls -ld $p failed")
+    val f = line.split("\\s+")
+    (f(0).substring(1, 10), f(2), f(3))
+  }
+
+  test("permission, owner and group load on first read, as ls -ld reports them then") {
+    val nio = open(classOf[NioLocalFileSystem])
+    try {
+      val f = new Path(tempDir(), "f")
+      val out = nio.create(f)
+      try out.write(1) finally out.close()
+      val st = nio.getFileStatus(f)
+      // changed after the status was taken: a status that read its mode
+      // eagerly would still report the umask's rw-r--r--
+      Files.setPosixFilePermissions(new java.io.File(f.toUri).toPath,
+        java.nio.file.attribute.PosixFilePermissions.fromString("rw-r-----"))
+      val (perm, owner, group) = lsLd(f)
+      assert(perm == "rw-r-----")
+      assert(st.getPermission.toString == perm)
+      assert(st.getOwner == owner && st.getGroup == group)
+    } finally nio.close()
+  }
+
+  test("a status whose file vanished before its permission read fails naming the path") {
+    val nio = open(classOf[NioLocalFileSystem])
+    try {
+      val dir = tempDir()
+      val f = new Path(dir, "f")
+      val out = nio.create(f)
+      try out.write(1) finally out.close()
+      val st = nio.getFileStatus(f)
+      assert(nio.delete(f, false))
+      val e = intercept[java.io.UncheckedIOException](st.getPermission)
+      assert(e.getCause.isInstanceOf[FileNotFoundException])
+      assert(e.getMessage.contains(f.toUri.getPath), e.getMessage)
+      intercept[FileNotFoundException](nio.getFileStatus(f))
+      assert(nio.listStatus(dir).isEmpty, "a vanished file is not listed")
+    } finally nio.close()
+  }
+
   test("bytes read through it move the global \"file\" statistics, even after a stock LocalFileSystem came first") {
     // Hadoop keys Statistics by FileSystem class and gives the global
     // "file" entry to the first class that registers; this JVM may have

@@ -6,17 +6,27 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Mu
 
 import graft.plans.{DotProductF, IntersectCardSortedLong, L1DistInt, NormSqF}
 
-/** SQL registration of the engine's native expressions, so `spark.sql`
-  * users get the same codegen'd hot paths as the DataFrame API:
+/** The engine's session extensions:
   *
-  *   - graft_dot(a, b)            — dot product over array<float>
-  *   - graft_normsq(a)            — sum of squares
-  *   - graft_cosine(a, b)         — cosine similarity
-  *   - graft_intersect_card(a, b) — |a ∩ b| of sorted array<long>
-  *   - graft_l1_dist(a, b)        — Σ|a_i-b_i| of array<int> histograms
+  *   - SQL registration of the native expressions, so `spark.sql` users
+  *     get the same codegen'd hot paths as the DataFrame API:
+  *     - graft_dot(a, b)            — dot product over array<float>
+  *     - graft_normsq(a)            — sum of squares
+  *     - graft_cosine(a, b)         — cosine similarity
+  *     - graft_intersect_card(a, b) — |a ∩ b| of sorted array<long>
+  *     - graft_l1_dist(a, b)        — Σ|a_i-b_i| of array<int> histograms
+  *   - the graft-lake MERGE INTO / UPDATE routing rule
+  *     ([[org.apache.spark.sql.graft.ResolveLakeMerge]]);
+  *   - the lake read re-plan
+  *     ([[org.apache.spark.sql.graft.VectorizeLakeMorRead]]), without
+  *     which DSv2 reads of DV-bearing, column-mapped and mixed-layout
+  *     versions refuse.
   *
-  * Two entry points: `withExtensions(new GraftExtensions)` at session build
-  * time, or `GraftFunctions.register(spark)` on a live session.
+  * Two entry points: `withExtensions(new GraftExtensions)` (or
+  * `spark.sql.extensions=graft.GraftExtensions`) at session build time
+  * installs all three; `GraftFunctions.register(spark)` on a live session
+  * registers the functions only — Spark cannot add rules to a built
+  * session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(e: SparkSessionExtensions): Unit = {
@@ -31,10 +41,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SupportsRowLevelOperations tables and ignores ours)
     e.injectResolutionRule(session =>
       new org.apache.spark.sql.graft.ResolveLakeMerge(session))
-    // DSv2 reads of a DV-bearing or column-mapped lake version re-plan
-    // onto Lake.read's vectorized scan with its in-scan DV predicate
-    // (merge-on-read without the row-mode scan or the driver-side
-    // position cap)
+    // DSv2 reads of a DV-bearing, column-mapped or mixed-layout lake
+    // version re-plan onto Lake.read's vectorized scan with its in-scan
+    // DV predicate — the only batch read such a version has
     e.injectResolutionRule(session =>
       new org.apache.spark.sql.graft.VectorizeLakeMorRead(session))
   }

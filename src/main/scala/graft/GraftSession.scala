@@ -67,8 +67,9 @@ object GraftSession {
       "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName)
     val given = new SparkConf()
     SparkSession.builder()
-      // the engine's SQL surface: native expressions (graft_dot, …) and
-      // the graft-lake MERGE INTO routing rule
+      // the engine's SQL surface: native expressions (graft_dot, …), the
+      // graft-lake MERGE INTO routing rule, and the lake read re-plan that
+      // DV-bearing, column-mapped and mixed-layout versions need
       .withExtensions(new GraftExtensions)
       .config(defaults.filterNot { case (k, _) => given.contains(k) }.toMap)
   }

@@ -758,7 +758,7 @@ object Lake {
   /** Attachments for exactly `files` — O(files) driver traffic: the
     * driver tail overlays one membership job over the entries' V rows
     * (skipped when the checkpoint provably carries none, or a forced
-    * materialization is already soft-cached). The scoped accessor MoR
+    * materialization is already soft-cached). The scoped accessor read
     * planning, CDC planning and restore use instead of forcing. */
   private[graft] def dvsFor(spark: SparkSession, dvs: Map[String, Seq[String]],
       files: Seq[String]): Map[String, Seq[String]] = dvs match {
@@ -772,11 +772,11 @@ object Lake {
             case fl => cached.view.filterKeys(fl.toSet).toMap
           }
         } else {
-          // a WHOLE-TABLE ask (the row-mode fallback planner) skips the
-          // membership array entirely — building it would force the
-          // path-lazy list and ship a corpus-sized closure; every live
-          // pair's file is in the read by invariant, so this is simply
-          // the full live map (the caller asked for exactly that)
+          // a WHOLE-TABLE ask (compactionCensus passes a state's own
+          // soft-cached path-lazy list) skips the membership array
+          // entirely — building it would force the list and ship a
+          // corpus-sized closure; every live pair's file is live by
+          // invariant, so this is simply the full live map
           val wholeTable = files.isInstanceOf[DeferredFiles]
           val tailPart =
             if (wholeTable) dd.tailAdds
@@ -900,19 +900,6 @@ object Lake {
       case m => m.nonEmpty
     }
 
-  /** Conservative "does any of `candidates` carry attachments" — exact
-    * on eager maps, may answer true on a deferred map without a job
-    * (callers use it where a false positive only withholds an
-    * optimization, never correctness). */
-  private[graft] def dvMaybeAny(dvs: Map[String, Seq[String]],
-      candidates: Seq[String]): Boolean = dvs match {
-    case dd: DeferredDvs =>
-      val cached = dd.cachedOrNull
-      if (cached != null) candidates.exists(cached.contains)
-      else !dd.cheapIsEmpty.contains(true)
-    case m => candidates.exists(m.contains)
-  }
-
   /** EXACT count of files carrying live attachments — a distinct-count
     * job on a deferred map (driver traffic: one long), direct on eager
     * ones. Diagnostics (DESCRIBE DETAIL) use this where a display
@@ -928,18 +915,6 @@ object Lake {
         dvPairsRdd(spark, dd).keys.distinct().count().toInt
       }
     case m => m.size
-  }
-
-  /** Cheap display hint for the dv'd-file count (the MoR scan
-    * description) — never forces. */
-  private[graft] def dvCountHint(dvs: Map[String, Seq[String]]): String = dvs match {
-    case dd: DeferredDvs =>
-      val cached = dd.cachedOrNull
-      if (cached != null) cached.size.toString
-      // pair count >= dv'd-file count, so this is a sound upper bound
-      // that still reads inside "<hint> of N file(s) tombstoned"
-      else s"<=${dd.cpDvPairs + dd.tailPairCount} (deferred)"
-    case m => m.size.toString
   }
 
   /** Live-file count at or above which a lazily-resolved columnar
@@ -2722,8 +2697,9 @@ object Lake {
     * columns refuse (their name is baked into every directory path — a
     * rename there IS a physical relayout); duplicate/missing names
     * refuse naming the columns. The DSv2 read surfaces serve mapped
-    * lakes too: the MoR scan translates logical names to physical at
-    * the parquet boundary ([[graft.sources.lake.LakeMorTable]]), so
+    * lakes too: [[graft.sources.lake.LakeMorTable]] is their table, and
+    * the extensions' read re-plan reads it through the same translation
+    * ([[org.apache.spark.sql.graft.VectorizeLakeMorRead]]), so
     * `spark.read.format("graft-lake")`, the named catalog, and SQL DML
     * all work over a renamed lake. */
   def renameColumn(spark: SparkSession, lakeDir: String,

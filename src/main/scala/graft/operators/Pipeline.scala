@@ -2637,11 +2637,11 @@ object Pipeline {
     * carry TWO sidecars), then [[Lake.compactDeletionVectors]] folds
     * each file's stack into one sidecar (a vectors-only `dvcompact`
     * commit — zero data bytes, CDC-invisible), and the corpus is read
-    * back through the DSv2 format string — the merge-on-read scan
-    * applying the CONSOLIDATED vectors. The oracle recomputes the
+    * back through the DSv2 format string — `Lake.read`'s plan applying
+    * the CONSOLIDATED vectors inside its scan. The oracle recomputes the
     * surviving corpus relationally, so one hash-match certifies the
     * fold's exactness end-to-end: union of positions, detach/attach
-    * delta, broadcast-shipped MoR application. */
+    * delta, in-scan MoR application. */
   private def px119(spark: SparkSession, dir: String): DataFrame = {
     val out = Scratch.dir(spark, "px119_lake")
     val docs = Tables(spark, dir, "documents")

@@ -32,9 +32,10 @@ import graft.operators.Pipeline
   * arrives as `AlwaysTrue` and tombstones every row — correct, but the
   * pathological shape for vectors; prefer `Lake.init` for a reset.
   *
-  * Mixed into both the clean-path [[LakeTable]] and the merge-on-read
-  * [[LakeMorTable]], so consecutive deletes (the second against a
-  * DV-bearing version) both work; version/timestamp-pinned reads refuse
+  * Mixed into both the clean-path [[LakeTable]] and [[LakeMorTable]]
+  * (DV-bearing, column-mapped and mixed-layout versions), so
+  * consecutive deletes (the second against a DV-bearing version) both
+  * work, with or without the graft extensions; version/timestamp-pinned reads refuse
   * (no deleting from the past).
   */
 private[lake] trait LakeDeletes extends SupportsDelete {

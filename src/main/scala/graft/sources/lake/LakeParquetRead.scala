@@ -9,8 +9,8 @@ import org.apache.spark.util.SerializableConfiguration
 /** The hadoop-conf preparation Spark's native `ParquetScan` performs
   * before broadcasting a reader factory — read-support wiring, the
   * requested schema, and the session's parquet semantics flags — shared
-  * by every lake surface that plans its own `FilePartition`s (the
-  * streaming tail and the merge-on-read batch scan). */
+  * by the lake surface that plans its own `FilePartition`s: the
+  * change-feed stream ([[LakeMicroBatchStream]]). */
 private[lake] object LakeParquetRead {
   def readerFactory(spark: SparkSession, dataSchema: StructType,
       partSchema: StructType): ParquetPartitionReaderFactory = {

@@ -136,8 +136,8 @@ class LakeSource extends TableProvider with DataSourceRegister
         // O(corpus) sequential driver RPCs and force the deferred list
         // (a genuinely missing resident still fails loudly at scan time
         // with the path named); eager states stay exact, and the
-        // sidecar check catches a hand-deleted DV before loadPositions
-        // dies with a raw path-not-found
+        // sidecar check catches a hand-deleted DV at resolution instead
+        // of in the read's tasks
         val checkables: Iterator[String] = resolved.files match {
           case dfl: Lake.DeferredFiles =>
             dfl.tailAdded.iterator ++
@@ -173,23 +173,23 @@ class LakeSource extends TableProvider with DataSourceRegister
     // (column-mapped) lake (physical parquet names need aliasing back to
     // logical). Both resolve through [[LakeMorTable]] — whose READS the
     // injected rule ([[org.apache.spark.sql.graft.VectorizeLakeMorRead]])
-    // re-plans onto Lake.read's vectorized scan; the table's own
-    // row-mode scan serves extension-less sessions, and its write/DML
-    // builders serve everyone.
+    // re-plans onto Lake.read's vectorized scan (a session without the
+    // graft extensions gets a loud refusal at execution), and whose
+    // write/DML builders serve every session.
     val resolvedSchema = DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
     // a MIXED-LAYOUT version (evolveLayout with both generations live)
     // also routes here: the delegated ParquetTable needs one uniform
     // directory layout for partition discovery, while Lake.read's
     // generation-grouped union (which the injected rule plans) does not
     // `dvMaybeNonEmpty` never forces a DEFERRED attachment map: an
-    // ambiguous answer routes to the MoR table, whose reads the injected
+    // ambiguous answer routes to LakeMorTable, whose reads the injected
     // rule re-plans onto the vectorized scan either way — a false
     // positive costs nothing on a clean lake beyond taking that route
     if (graft.operators.Lake.dvMaybeNonEmpty(st.dvs) ||
         graft.operators.Lake.hasMapping(resolvedSchema) ||
         resolvedSchema.exists(graft.operators.Lake.isDropped) ||
         graft.operators.Lake.layoutGenerationsOf(st).size > 1)
-      return new LakeMorTable(s"graft-lake $path@v${st.version} (row-mode)",
+      return new LakeMorTable(s"graft-lake $path@v${st.version} (merge-on-read)",
         path, st, pinned0)
     val root = {
       val p = new Path(path)
@@ -220,7 +220,7 @@ class LakeSource extends TableProvider with DataSourceRegister
   * ([[org.apache.spark.sql.graft.ResolveLakeMerge]]) matches on to route
   * row-level SQL onto the sparse commit paths. Public (the rule lives in
   * another package); implemented by both the clean-path [[LakeTable]]
-  * and the merge-on-read [[LakeMorTable]]. */
+  * and [[LakeMorTable]]. */
 trait GraftLakeTable {
   /** The lake's root directory (the commit target). */
   def lakeDirPath: String
@@ -230,12 +230,12 @@ trait GraftLakeTable {
   def lakeManifest: Lake.LakeState
   /** The lake layout's partition columns (in path order). */
   def lakePartitionCols: Seq[String] = Lake.partitionColsOf(lakeManifest)
-  /** True when this table's OWN DSv2 scan would run in row mode (a
-    * DV-bearing or column-mapped resolved version) — the signal the
-    * injected [[org.apache.spark.sql.graft.VectorizeLakeMorRead]] rule
-    * matches to swap the read for `Lake.read`'s vectorized scan
-    * plan. The row-mode scan remains the fallback for sessions built
-    * without the graft extensions. */
+  /** True when this table has no batch read of its own (a DV-bearing,
+    * column-mapped or mixed-layout resolved version, [[LakeMorTable]]):
+    * the signal the injected
+    * [[org.apache.spark.sql.graft.VectorizeLakeMorRead]] rule matches to
+    * plan the read as `Lake.read`'s vectorized scan. Without the graft
+    * extensions such a read refuses when it executes. */
   def lakeRowModeScan: Boolean = false
 }
 

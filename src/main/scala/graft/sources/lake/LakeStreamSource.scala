@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.sources.DataSourceRegister
@@ -777,15 +777,13 @@ private[lake] class LakeMicroBatchStream(lakeDir: String, fullSchema: StructType
   }
 
   /** Driver-side load of the positions `attach` names (file → sidecar
-    * dirs) — bounded by the restore's attachment sizes, capped like the
-    * MoR scan's position load so a pathological range refuses loudly
-    * instead of flooding the driver. */
+    * dirs) — bounded by the restore's attachment sizes, and capped at
+    * `spark.graft.lake.morMaxPositions` so a pathological range refuses
+    * loudly instead of flooding the driver. */
   private def loadSkips(spark: SparkSession, qroot: Path,
       attach: Map[String, Seq[String]], v: Long): Map[String, Seq[Long]] = {
     if (attach.isEmpty) return Map.empty
     import org.apache.spark.sql.functions.col
-    // same configurable ceiling as the MoR scan's position load — ONE
-    // knob governs both driver-side DV loads
     val cap = spark.conf.getOption(LakeMorTable.MaxPositionsConf)
       .flatMap(_.toLongOption).getOrElse(LakeMorTable.DefaultMaxPositions)
     val sidecars = attach.values.flatten.toSeq.distinct.sorted
@@ -921,12 +919,6 @@ private[lake] class LakeMicroBatchStream(lakeDir: String, fullSchema: StructType
       s"columns=${fullSchema.fieldNames.mkString(",")}"
 }
 
-/** One UNSPLIT skip-bearing file of a streaming batch: a restore's
-  * DV-involved file whose tombstoned row positions must not re-emit —
-  * decoded through [[PositionSkipReader]] over the shared parquet
-  * factory. Positions ride in the partition payload: restores are rare
-  * and their per-file position sets bounded (capped at plan time), so
-  * a broadcast would cost more than it saves here. */
 /** A plain (skip-free) file partition of a streaming batch, carrying
   * the batch's decode mode: `rowMode` is true iff the SAME batch also
   * planned skip partitions (Spark refuses mixed row/columnar partitions
@@ -941,6 +933,12 @@ private[lake] final case class LakeBatchPartition(
   override def preferredLocations(): Array[String] = files.preferredLocations()
 }
 
+/** One UNSPLIT skip-bearing file of a streaming batch: a restore's
+  * DV-involved file whose tombstoned row positions must not re-emit —
+  * decoded through [[PositionSkipReader]] over the shared parquet
+  * factory. Positions ride in the partition payload: restores are rare
+  * and their per-file position sets bounded (capped at plan time), so
+  * a broadcast would cost more than it saves here. */
 private[lake] final case class LakeSkipPartition(
     files: org.apache.spark.sql.execution.datasources.FilePartition,
     skip: Seq[Long],
@@ -973,5 +971,39 @@ private[lake] final class PermutingColumnarReader(
     val b = inner.get()
     new ColumnarBatch(perm.map(b.column), b.numRows())
   }
+  override def close(): Unit = inner.close()
+}
+
+/** Projects the reader's (data ++ partition) row layout back into the
+  * declared order — engaged only when a partition column is not
+  * schema-last (post-evolveLayout lakes). The projection is built
+  * executor-side per reader (generated code is not serializable). */
+private[lake] class ReorderingReader(inner: PartitionReader[InternalRow],
+    idx: Array[Int], emitted: StructType) extends PartitionReader[InternalRow] {
+  private val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
+    idx.toSeq.map(i => org.apache.spark.sql.catalyst.expressions.BoundReference(
+      i, emitted(i).dataType, nullable = true)))
+  override def next(): Boolean = inner.next()
+  override def get(): InternalRow = proj(inner.get())
+  override def close(): Unit = inner.close()
+}
+
+/** Streams the wrapped reader's rows, counting positions and skipping
+  * the tombstoned ones. `skip` is sorted and rows arrive in file order
+  * (unsplit, unfiltered read), so one advancing pointer decides each
+  * row in O(1). */
+private[lake] class PositionSkipReader(inner: PartitionReader[InternalRow],
+    skip: Array[Long]) extends PartitionReader[InternalRow] {
+  private var pos = -1L
+  private var idx = 0
+  override def next(): Boolean = {
+    while (inner.next()) {
+      pos += 1
+      while (idx < skip.length && skip(idx) < pos) idx += 1
+      if (idx >= skip.length || skip(idx) != pos) return true
+    }
+    false
+  }
+  override def get(): InternalRow = inner.get()
   override def close(): Unit = inner.close()
 }

@@ -154,30 +154,3 @@ object LakeStatPruning {
     (parts.flatMap(_._1), parts.flatMap(_._2))
   }
 }
-
-/** The merge-on-read scan's builder: pushed filters contribute their
-  * stats-prunable bounds to CANDIDATE FILE skipping (sound under
-  * position-based deletion vectors — dropping whole files never
-  * disturbs row positions within the survivors) but NOTHING is pushed
-  * into the data read itself, so Spark re-applies every predicate
-  * post-scan and the position counting stays exact. */
-class LakeMorScanBuilder(
-    manifestSchema: StructType,
-    scanFor: (Seq[graft.operators.Lake.ColBound], Seq[(String, Seq[Any])],
-      Option[StructType]) => Scan)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownCatalystFilters {
-  private var required: Option[StructType] = None
-  private var bounds: Seq[graft.operators.Lake.ColBound] = Seq.empty
-  private var inLists: Seq[(String, Seq[Any])] = Seq.empty
-  override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
-    val (bs, ins) = LakeStatPruning.boundsAndInsFrom(manifestSchema, filters)
-    bounds = bs
-    inLists = ins
-    filters // everything stays a post-scan predicate
-  }
-  override def pushedFilters: Array[Predicate] = Array.empty
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = Some(requiredSchema)
-  override def build(): Scan = scanFor(bounds, inLists, required)
-}

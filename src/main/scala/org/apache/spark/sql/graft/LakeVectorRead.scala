@@ -75,8 +75,9 @@ object LakeVectorRead {
 }
 
 /** Vectorized MERGE-ON-READ for the DSv2 read surfaces: replaces a
-  * read-position [[DataSourceV2Relation]] over a row-mode lake table
-  * (DV-bearing or column-mapped version — [[GraftLakeTable.lakeRowModeScan]])
+  * read-position [[DataSourceV2Relation]] over a lake table without a
+  * batch read of its own (DV-bearing, column-mapped or mixed-layout
+  * version — [[GraftLakeTable.lakeRowModeScan]])
   * with [[graft.operators.Lake]]'s own read plan, during analysis. The
   * format string, the named catalog and SQL views then all read through
   * the SAME plan `Lake.read` produces: a fully VECTORIZED parquet scan
@@ -85,9 +86,9 @@ object LakeVectorRead {
   * `(_metadata.file_path, row_index)` ([[graft.plans.LakeDvKeep]]),
   * which loads each file's positions in the task that reads the file —
   * no join, no driver-side position load, no position cap, whole-stage
-  * codegen intact. The table's own row-mode scan ([[graft.sources.lake
-  * .LakeMorTable]]) remains as the fallback for sessions built without
-  * the graft extensions.
+  * codegen intact. This is the only batch read of such a table: in a
+  * session built without the graft extensions its scan
+  * ([[graft.sources.lake.LakeMorTable]]) refuses when it executes.
   *
   * DML and write nodes keep their TARGET relation on the DSv2 surface —
   * `DELETE`/`UPDATE`/`MERGE` resolution ([[ResolveLakeMerge]], the

@@ -111,6 +111,19 @@ class LakeDvReadSpec extends SparkTestBase {
       s"stat pruning must keep the clean read's $clean file(s), DV read opened ${scanned(dv)}")
   }
 
+  test("the format read of a DV-bearing lake reports its bytes to the planner and returns the surviving rows") {
+    val out = freshDir("dvread-format")
+    initLake(out)
+    delete(out, 2L, 9L, 21L, 33L)
+    val df = spark.read.format("graft-lake").load(out)
+    // without a size a join against the lake prices at
+    // defaultSizeInBytes and never broadcasts
+    val stats = df.queryExecution.optimizedPlan.stats
+    assert(stats.sizeInBytes > 0 && stats.sizeInBytes < 64L * 1024 * 1024,
+      s"the DV-bearing format read must report its candidate bytes, got ${stats.sizeInBytes}")
+    assert(ids(df) == (0L until 40L).toSet -- Set(2L, 9L, 21L, 33L))
+  }
+
   test("stacked sidecars from two deletes, and the same file after dvcompact consolidation") {
     val out = freshDir("dvread-stacked")
     initLake(out, parts = Seq("split"))

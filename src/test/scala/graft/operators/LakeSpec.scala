@@ -867,8 +867,8 @@ class LakeSpec extends SparkTestBase {
       "the format-string read must apply the deletion vectors")
     // the driver-side position cap does NOT bind this path: the
     // vectorized read loads positions per file inside its tasks, so
-    // there is no driver position load to cap (the cap still governs
-    // the no-extensions fallback scan and the CDC restore load)
+    // there is no driver position load to cap (the cap governs only
+    // the CDC restore load)
     spark.conf.set(graft.sources.lake.LakeMorTable.MaxPositionsConf, "1")
     try assert(ids(spark.read.format("graft-lake").load(out)) ==
       (0L until 40L).toSet -- Set(0L, 7L, 13L),
@@ -1517,57 +1517,6 @@ class LakeSpec extends SparkTestBase {
     assert(ids(Lake.read(spark, out)) == (0L until 40L).toSet - 4L)
     // without the grace period the same files would have been reclaimed
     // and this commit would have referenced deleted data
-  }
-
-  test("MoR position load is ONE bounded job; positions ship by broadcast; the scan description names compactLake") {
-    val out = freshDir("lake-mor-broadcast")
-    writePlain(fixture(), out)
-    Lake.adopt(spark, out)                                                      // v0
-    Pipeline.deleteFromLakeSparse(spark, out, Seq(2L, 9L, 21L, 33L).toDF("doc_id"), "doc_id") // v1
-    val st = Lake.latestManifest(spark, out).get
-    val root = {
-      val p = new org.apache.hadoop.fs.Path(out)
-      val f = p.getFileSystem(spark.sessionState.newHadoopConf())
-      f.makeQualified(p)
-    }
-    // the cap check and the load must be ONE bounded fetch — no separate
-    // count pass over the sidecars (job-group ids count the jobs)
-    spark.sparkContext.setJobGroup("graft-dv-load", "position load probe")
-    val pos = try graft.sources.lake.LakeMorTable.loadPositions(spark, root, st)
-      finally spark.sparkContext.clearJobGroup()
-    assert(pos.values.map(_.length).sum == 4, "all four tombstones must load")
-    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup("graft-dv-load").length
-    assert(jobs == 1, s"the position load must be one bounded job, ran $jobs")
-    // positions ride in ONE broadcast keyed by file, not in the task
-    // payloads: every MorPartition serializes only its file + rel path
-    val props = new java.util.HashMap[String, String](); props.put("path", out)
-    val table = new graft.sources.lake.LakeSource()
-      .getTable(null, Array.empty, props)
-    val scan = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-      .newScanBuilder(new org.apache.spark.sql.util.CaseInsensitiveStringMap(props))
-      .build()
-    val parts = scan.toBatch.planInputPartitions()
-    val morParts = parts.collect { case m: graft.sources.lake.MorPartition => m }
-    assert(morParts.nonEmpty, "the tombstoned files must plan as MoR partitions")
-    morParts.foreach { m =>
-      val bos = new java.io.ByteArrayOutputStream()
-      val oos = new java.io.ObjectOutputStream(bos)
-      try oos.writeObject(m) finally oos.close()
-      assert(bos.size() < 4096,
-        s"a MoR partition payload must not embed positions (got ${bos.size()} bytes)")
-    }
-    // the transitional scan names its cost and the way out
-    assert(scan.description().contains("consider compactLake"),
-      s"the MoR scan description must point at compactLake, got: ${scan.description()}")
-    // and reports REAL statistics — without them a join against a
-    // DV-bearing lake prices at defaultSizeInBytes and never broadcasts
-    val stats = spark.read.format("graft-lake").load(out)
-      .queryExecution.optimizedPlan.stats
-    assert(stats.sizeInBytes > 0 && stats.sizeInBytes < 64L * 1024 * 1024,
-      s"the row-mode scan must report its candidate bytes, got ${stats.sizeInBytes}")
-    // and the read through the factory (broadcast path) stays exact
-    assert(ids(spark.read.format("graft-lake").load(out)) ==
-      (0L until 40L).toSet -- Set(2L, 9L, 21L, 33L))
   }
 
   test("two-column stats pruning opens strictly fewer files than either column alone") {

@@ -43,44 +43,6 @@ class LakeStreamPlanSpec extends SparkTestBase {
     assert(plannedFiles == nFiles, "bin-packing must not drop or duplicate a file")
   }
 
-  test("the merge-on-read scan also skips files by manifest stats, and only tombstoned survivors pay the row-mode partition") {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GreaterThanOrEqual, LessThan, Literal}
-    import org.apache.spark.sql.types.LongType
-    val out = java.nio.file.Files.createTempDirectory("morprune").toString + "/lake"
-    // 4 doc_id-clustered stats'd files; tombstone one row of the LOW file
-    Lake.init(spark,
-      fixture(0 until 40).repartitionByRange(4, col("doc_id"))
-        .sortWithinPartitions("doc_id"),
-      out, Seq.empty, statsCols = Seq("doc_id"))
-    Pipeline.deleteFromLakeSparse(spark, out, Seq(1L).toDF("doc_id"), "doc_id")
-    val st = Lake.latestManifest(spark, out).get
-    assert(st.files.size == 4 && st.dvs.size == 1)
-    def planned(filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) = {
-      val tbl = new LakeMorTable("t", out, st, pinned = false)
-      val sb = tbl.newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
-        .asInstanceOf[org.apache.spark.sql.graft.LakeMorScanBuilder]
-      sb.pushFilters(filters)
-      sb.build().toBatch.planInputPartitions()
-    }
-    val docId = AttributeReference("doc_id", LongType)()
-    // a high range misses the tombstoned low file entirely: one clean
-    // bin-packed partition, zero row-mode partitions
-    val high = planned(Seq(GreaterThanOrEqual(docId, Literal(30L))))
-    assert(high.length == 1 && !high.exists(_.isInstanceOf[MorPartition]),
-      s"a range missing every tombstoned file must plan clean partitions only, got ${high.length}")
-    // a low range hits exactly the tombstoned file: one MorPartition
-    val low = planned(Seq(LessThan(docId, Literal(5L))))
-    assert(low.length == 1 && low.forall(_.isInstanceOf[MorPartition]),
-      s"a range hitting only the tombstoned file must plan its row-mode partition, got ${low.length}")
-    // no filters: everything plans (3 clean files bin-pack + 1 row-mode)
-    val all = planned(Seq.empty)
-    assert(all.count(_.isInstanceOf[MorPartition]) == 1 && all.length >= 2)
-    // and the end-to-end read through the format stays exact
-    val rows = spark.read.format("graft-lake").load(out)
-      .filter(col("doc_id") < 5L).select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(rows == Set(0L, 2L, 3L, 4L))
-  }
-
   test("maxBytesPerTrigger bounds catch-up by bytes and always admits at least one version") {
     val out = java.nio.file.Files.createTempDirectory("lakebytes").toString + "/lake"
     Lake.init(spark, fixture(0 until 50), out, Seq("split", "shard_id"))   // v1

@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{functions, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, count, date_format, hash, lit, max, min, pmod, substring}
+import org.apache.spark.sql.graft.TaskHadoopConf
 import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
 /** Manifest-resolved lake storage: the write-audit-publish commit protocol
@@ -3051,8 +3052,7 @@ object Lake {
         new Path(root, f).toUri.toString -> graft.plans.LakeScanFiles.Entry(f,
           scs.map(sc => new Path(root, sc).toString))
       }.toMap,
-      // the session's own Hadoop keys (`spark.*` keys are Spark's)
-      spark.conf.getAll.filter { case (k, _) => !k.startsWith("spark.") })
+      TaskHadoopConf(spark))
 
   private def dvKeep(m: graft.plans.LakeScanFiles): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(graft.plans.LakeDvKeep(
@@ -3875,16 +3875,6 @@ object Lake {
 
   private def vOp[T](t: => T): T = { vacuumDriverFsOps.incrementAndGet(); t }
 
-  /** The driver's hadoop conf as plain entries, rebuildable inside tasks
-    * (credentials, fs impls) — `SerializableConfiguration` is
-    * private[spark], so the maintenance jobs ride the same device as
-    * [[footerStats]]. */
-  private def hadoopConfProps(spark: SparkSession): Array[(String, String)] = {
-    import scala.jdk.CollectionConverters._
-    spark.sessionState.newHadoopConf().iterator().asScala
-      .map(e => e.getKey -> e.getValue).toArray
-  }
-
   /** `(relPath, mtime)` inventory of the lake's qualifying parquet data
     * files. `distribute = true` runs each top-level directory's
     * recursive walk INSIDE a task (the Delta VACUUM parallel-listing
@@ -3936,7 +3926,7 @@ object Lake {
       }
       Some((out.result().distinct.sortBy(_._1), None))
     } else if (dirs.nonEmpty) {
-      val confProps = hadoopConfProps(spark)
+      val taskConf = TaskHadoopConf(spark)
       val rootPrefix = qroot.toUri.getPath.stripSuffix("/")
       val par = spark.sparkContext.defaultParallelism
       def recursiveRdd(dirStrs: Seq[String]): org.apache.spark.rdd.RDD[(String, Long)] = {
@@ -3944,10 +3934,8 @@ object Lake {
         spark.sparkContext
           .parallelize(dirStrs, math.min(dirStrs.size, par))
           .flatMap { dir =>
-            val conf = new org.apache.hadoop.conf.Configuration(false)
-            confProps.foreach { case (k, v) => conf.set(k, v) }
             val p = new Path(dir)
-            val tfs = p.getFileSystem(conf)
+            val tfs = p.getFileSystem(taskConf.value)
             val b = Seq.newBuilder[(String, Long)]
             val it = tfs.listFiles(p, true)
             while (it.hasNext) {
@@ -3985,10 +3973,8 @@ object Lake {
           spark.sparkContext
             .parallelize(topStrs, math.min(topStrs.size, par))
             .flatMap { dir =>
-              val conf = new org.apache.hadoop.conf.Configuration(false)
-              confProps.foreach { case (k, v) => conf.set(k, v) }
               val p = new Path(dir)
-              val tfs = p.getFileSystem(conf)
+              val tfs = p.getFileSystem(taskConf.value)
               tfs.listStatus(p).toSeq.map(s => (tfs.makeQualified(s.getPath)
                 .toUri.getPath, s.isDirectory, s.getModificationTime))
             }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -4223,16 +4209,14 @@ object Lake {
     if (!distribute) {
       entries.foreach { case (rel, rec) => vOp(fs.delete(new Path(root, rel), rec)) }
     } else {
-      val confProps = hadoopConfProps(spark)
+      val taskConf = TaskHadoopConf(spark)
       val rootStr = fs.makeQualified(root).toString
       spark.sparkContext
         .parallelize(entries, math.min(
           1 + entries.size / 1000, spark.sparkContext.defaultParallelism))
         .foreachPartition { it =>
-          val conf = new org.apache.hadoop.conf.Configuration(false)
-          confProps.foreach { case (k, v) => conf.set(k, v) }
           val r = new Path(rootStr)
-          val tfs = r.getFileSystem(conf)
+          val tfs = r.getFileSystem(taskConf.value)
           it.foreach { case (rel, rec) => tfs.delete(new Path(r, rel), rec) }
         }
     }
@@ -4792,22 +4776,15 @@ object Lake {
     // serial driver round-trips (Iceberg collects footer stats in the
     // writing tasks; staged-then-moved files collect them in one read
     // job here). The collect is bounded by the staged file count —
-    // manifest-sized by construction. The driver's hadoop conf rides
-    // along as plain entries (credentials, fs impls).
-    val confProps = {
-      import scala.jdk.CollectionConverters._
-      spark.sessionState.newHadoopConf().iterator().asScala
-        .map(e => e.getKey -> e.getValue).toArray
-    }
+    // manifest-sized by construction.
+    val taskConf = TaskHadoopConf(spark)
     val rootStr = root.toString
     val colsArr = cols
     spark.sparkContext
       .parallelize(files, math.min(files.size, spark.sparkContext.defaultParallelism))
       .mapPartitions { it =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confProps.foreach { case (k, v) => conf.set(k, v) }
         val r = new Path(rootStr)
-        it.map(rel => footerStatsOne(r, rel, colsArr, conf))
+        it.map(rel => footerStatsOne(r, rel, colsArr, taskConf.value))
       }.collect().toMap
   }
 
@@ -5564,11 +5541,7 @@ object Lake {
       .toOption.collect { case s: StructType => s }
     val phys = schema.flatMap(_.find(_.name == colName)).map(physicalName)
       .getOrElse(colName)
-    val confProps = {
-      import scala.jdk.CollectionConverters._
-      spark.sessionState.newHadoopConf().iterator().asScala
-        .map(e => e.getKey -> e.getValue).toArray
-    }
+    val taskConf = TaskHadoopConf(spark)
     val rootStr = fsRoot(spark, lakeDir)._2.toString
     val keysB = spark.sparkContext.broadcast(keys)
     spark.sparkContext
@@ -5576,8 +5549,7 @@ object Lake {
       .mapPartitions { it =>
         import scala.jdk.CollectionConverters._
         import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confProps.foreach { case (k, v) => conf.set(k, v) }
+        val conf = taskConf.value
         val root = new Path(rootStr)
         // xxhash of each key by physical type, computed ONCE per task
         // (parquet-mr's only hash strategy; a bloom reporting any other
@@ -5704,21 +5676,15 @@ object Lake {
       val chunks = math.max(1L,
         (n + bloomProbeMaxKeys(spark) - 1) / bloomProbeMaxKeys(spark)).toInt
       val hashChunks = hashRdd.repartition(chunks).glom()
-      val confProps = {
-        import scala.jdk.CollectionConverters._
-        spark.sessionState.newHadoopConf().iterator().asScala
-          .map(e => e.getKey -> e.getValue).toArray
-      }
+      val taskConf = TaskHadoopConf(spark)
       val rootStr = fsRoot(spark, lakeDir)._2.toString
       val candRdd = spark.sparkContext.parallelize(candidates,
         math.min(candidates.size, spark.sparkContext.defaultParallelism))
       candRdd.cartesian(hashChunks).map { case (rel, hashes) =>
         import scala.jdk.CollectionConverters._
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confProps.foreach { case (k, v) => conf.set(k, v) }
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new Path(new Path(rootStr), rel), conf))
+            new Path(new Path(rootStr), rel), taskConf.value))
         val keep = try {
           reader.getFooter.getBlocks.asScala.exists { b =>
             b.getColumns.asScala.find(_.getPath.toDotString == phys) match {
@@ -7062,7 +7028,7 @@ object Lake {
       cutoff: Long, minAgeMs: Long, deepMtime: Boolean): Seq[String] = {
     val (fs, root) = fsRoot(spark, lakeDir)
     val qroot = fs.makeQualified(root)
-    val confProps = hadoopConfProps(spark)
+    val taskConf = TaskHadoopConf(spark)
     val rootStr = qroot.toString
     val sc = spark.sparkContext
     val liveFromEntries: org.apache.spark.rdd.RDD[String] = entriesTags match {
@@ -7084,10 +7050,8 @@ object Lake {
     val deep = deepMtime
     val listed: org.apache.spark.rdd.RDD[(String, Long)] =
       sc.parallelize(Seq(DvDirName, CdcDirName), 2).flatMap { dn =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confProps.foreach { case (k, v) => conf.set(k, v) }
         val p = new Path(rootStr, dn)
-        val tfs = p.getFileSystem(conf)
+        val tfs = p.getFileSystem(taskConf.value)
         if (!tfs.exists(p)) Seq.empty
         else tfs.listStatus(p).toSeq.map { s =>
           val mtime =

@@ -13,6 +13,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.graft.TaskHadoopConf
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.roaringbitmap.RoaringBitmap
@@ -24,23 +25,14 @@ import org.roaringbitmap.RoaringBitmap
   * threshold), shipped to tasks inside the plan, and read there once per
   * file, never per row.
   *
-  * Sidecars open with the application's Hadoop configuration (its
-  * `spark.hadoop.*` entries) plus `hadoopOverrides`, the Hadoop keys set
-  * on the reading session: the whole session configuration (~110 KB
-  * serialized) would ride in every task binary, and a DV-bearing read
-  * measured ~30 ms slower with it on 4 vCPUs. */
+  * Sidecars open with the reading session's Hadoop configuration, carried
+  * as a [[TaskHadoopConf]]: the whole configuration (~110 KB serialized)
+  * would ride in every task binary, and a DV-bearing read measured ~30 ms
+  * slower with it on 4 vCPUs. */
 final case class LakeScanFiles(
     byPath: Map[String, LakeScanFiles.Entry],
-    hadoopOverrides: Map[String, String]) {
+    hadoopConf: TaskHadoopConf) {
   override def toString: String = s"${byPath.size} files"
-
-  @transient private[plans] lazy val hadoopConf: Configuration =
-    if (hadoopOverrides.isEmpty) LakeDvSidecars.appHadoopConf
-    else {
-      val c = new Configuration(LakeDvSidecars.appHadoopConf)
-      hadoopOverrides.foreach { case (k, v) => c.set(k, v) }
-      c
-    }
 }
 
 object LakeScanFiles {
@@ -64,7 +56,7 @@ final class LakeDvProbe(files: LakeScanFiles) {
       rel = null
       deleted =
         if (entry == null || entry.sidecars.isEmpty) null
-        else LakeDvSidecars.deletedRows(entry, files.hadoopConf)
+        else LakeDvSidecars.deletedRows(entry, files.hadoopConf.value)
     }
 
   /** False iff row `pos` of the file at `p` carries a deletion vector. */
@@ -165,16 +157,6 @@ case class LakeScanFile(child: Expression, files: LakeScanFiles) extends UnaryEx
 object LakeDvSidecars {
 
   val CacheBytes: Long = 64L << 20
-
-  /** This JVM's Hadoop configuration: the defaults plus the application's
-    * `spark.hadoop.*` entries, as Spark builds it for its own executors. */
-  private[plans] lazy val appHadoopConf: Configuration = {
-    val c = new Configuration()
-    Option(org.apache.spark.SparkEnv.get).foreach(_.conf.getAll.foreach { case (k, v) =>
-      if (k.startsWith("spark.hadoop.")) c.set(k.stripPrefix("spark.hadoop."), v)
-    })
-    c
-  }
 
   private final class Decoded(
       val byFile: java.util.HashMap[String, RoaringBitmap], val bytes: Long)

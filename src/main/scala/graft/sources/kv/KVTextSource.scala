@@ -9,11 +9,11 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.graft.TaskHadoopConf
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 implementation of the reference engine's wire format:
   * line-oriented `key value` text (reference: src/utils.rs:47-53 writes,
@@ -33,9 +33,16 @@ import org.apache.spark.util.SerializableConfiguration
   * Column pruning is pushed into the source (SupportsPushDownRequiredColumns):
   * a key-only projection never materializes values, and vice versa.
   *
+  * Line ends: a `\r` right before a `\n` is dropped, so CRLF files read
+  * like LF files; any other `\r` is data. The writer refuses `\r` and `\n`
+  * in keys and values, so everything it writes reads back unchanged. It
+  * names its files `part-<partition>-<task>.txt`, one per non-empty task.
+  * `graft.sources.KVText` is a thin call into this source.
+  *
   * All filesystem access goes through the session's Hadoop configuration
-  * (spark.hadoop.* settings apply), shipped to tasks via
-  * [[SerializableConfiguration]].
+  * (`newHadoopConf()`: spark.hadoop.* settings, keys set on
+  * `sparkContext.hadoopConfiguration` and session keys apply). Each scan
+  * and each write ships it to tasks once, as a [[TaskHadoopConf]].
   */
 class KVTextSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-kv"
@@ -65,11 +72,6 @@ object KVTextSource {
     * KiB would swamp the scheduler; 32 MiB is a scan-friendly default and
     * the reference's constant remains reachable via `option("chunkSize", 1024)`. */
   val DefaultChunkSize: Long = 32L * 1024 * 1024
-
-  /** Driver-side session Hadoop conf (spark.hadoop.* applied), wrapped for
-    * shipping into tasks. */
-  private[kv] def hadoopConf(): SerializableConfiguration =
-    new SerializableConfiguration(SparkSession.active.sessionState.newHadoopConf())
 }
 
 class KVTable(path: String, chunk: Long) extends Table with SupportsRead with SupportsWrite {
@@ -109,10 +111,11 @@ class KVScan(path: String, chunk: Long, required: StructType) extends Scan with 
   override def description(): String =
     s"graft-kv $path chunkSize=$chunk columns=${required.fieldNames.mkString(",")}"
 
+  private lazy val conf = SparkSession.active.sessionState.newHadoopConf()
+
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = KVTextSource.hadoopConf()
     val p = new Path(path)
-    val fs = p.getFileSystem(conf.value)
+    val fs = p.getFileSystem(conf)
     // a missing path is an operator error, not an empty table — fail like
     // every built-in file source does
     if (!fs.exists(p))
@@ -132,13 +135,13 @@ class KVScan(path: String, chunk: Long, required: StructType) extends Scan with 
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    KVReaderFactory(required.fieldNames, KVTextSource.hadoopConf())
+    KVReaderFactory(required.fieldNames, TaskHadoopConf(conf))
 }
 
 case class KVInputPartition(file: String, start: Long, end: Long, fileLen: Long)
     extends InputPartition
 
-case class KVReaderFactory(columns: Array[String], conf: SerializableConfiguration)
+case class KVReaderFactory(columns: Array[String], conf: TaskHadoopConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new KVPartitionReader(partition.asInstanceOf[KVInputPartition], columns, conf)
@@ -170,10 +173,11 @@ private[sources] object KVReaderGauges {
   * previous split — even when it happens to start exactly at `start`), and
   * consumes every line whose first byte lies at offset <= `end`, running
   * past `end` to finish the last one. Together the two rules give
-  * exactly-once line delivery across splits.
+  * exactly-once line delivery across splits. A `\r` right before the
+  * `\n` that ends a line is not part of it.
   */
 class KVPartitionReader(p: KVInputPartition, columns: Array[String],
-    conf: SerializableConfiguration) extends PartitionReader[InternalRow] {
+    conf: TaskHadoopConf) extends PartitionReader[InternalRow] {
 
   private val needKey = columns.contains("key")
   private val needValue = columns.contains("value")
@@ -195,17 +199,23 @@ class KVPartitionReader(p: KVInputPartition, columns: Array[String],
     while (b >= 0 && b != '\n') { b = in.read(); pos += 1 }
   }
 
-  /** Reads the next full line starting at `pos`; null at range/file end. */
+  /** Reads the next full line starting at `pos`; null at range/file end.
+    * A `\r` is held back until the next byte shows it does not end a
+    * CRLF line. */
   private def nextLine(): Array[Byte] = {
     if (pos > p.end || pos >= p.fileLen) return null
     buf.reset()
+    var cr = false
     var b = in.read()
     pos += (if (b >= 0) 1 else 0)
     while (b >= 0 && b != '\n') {
-      buf.write(b)
+      if (cr) buf.write('\r')
+      cr = b == '\r'
+      if (!cr) buf.write(b)
       b = in.read()
       pos += 1
     }
+    if (cr && b < 0) buf.write('\r')
     buf.toByteArray
   }
 
@@ -254,29 +264,30 @@ class KVWrite(path: String, doTruncate: Boolean) extends Write {
   * each task abort deletes its own partial file, and retries write a fresh
   * task-scoped filename. */
 class KVBatchWrite(path: String, doTruncate: Boolean) extends BatchWrite {
+  private lazy val conf = SparkSession.active.sessionState.newHadoopConf()
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val conf = KVTextSource.hadoopConf()
     val p = new Path(path)
-    val fs = p.getFileSystem(conf.value)
+    val fs = p.getFileSystem(conf)
     if (doTruncate && fs.exists(p)) fs.delete(p, true)
     fs.mkdirs(p)
-    KVWriterFactory(path, conf)
+    KVWriterFactory(path, TaskHadoopConf(conf))
   }
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.collect { case KVCommitMessage(file) =>
       val p = new Path(file)
-      val fs = p.getFileSystem(KVTextSource.hadoopConf().value)
+      val fs = p.getFileSystem(conf)
       if (fs.exists(p)) fs.delete(p, false)
     }
 }
 
 case class KVCommitMessage(file: String) extends WriterCommitMessage
 
-case class KVWriterFactory(path: String, conf: SerializableConfiguration)
+case class KVWriterFactory(path: String, conf: TaskHadoopConf)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new KVDataWriter(s"$path/chunk-$partitionId-$taskId.txt", conf)
+    new KVDataWriter(f"$path/part-$partitionId%05d-$taskId.txt", conf)
 }
 
 /** Writes `key value\n` lines (reference src/utils.rs:47-53 — but with a
@@ -284,28 +295,33 @@ case class KVWriterFactory(path: String, conf: SerializableConfiguration)
   * u64, which could collide, src/utils.rs:64-77).
   *
   * Representability is enforced, not assumed: the line format cannot carry
-  * an empty key, a key containing a space, or a newline in either field —
-  * such rows would silently re-parse as DIFFERENT data (key splits shift,
-  * embedded newlines become extra records), so the writer throws instead.
-  * Null keys are dropped (documented format limitation); null values write
-  * as empty strings. */
-class KVDataWriter(file: String, conf: SerializableConfiguration)
+  * an empty key, a key containing a space, or a line break (`\n` or `\r`)
+  * in either field — such rows would silently re-parse as DIFFERENT data
+  * (key splits shift, embedded newlines become extra records, a `\r`
+  * before one is dropped), so the writer throws instead. Null keys are
+  * dropped (documented format limitation); null values write as empty
+  * strings. The file is created at the first row, so an empty task
+  * leaves none. */
+class KVDataWriter(file: String, conf: TaskHadoopConf)
     extends DataWriter[InternalRow] {
   private val p = new Path(file)
   private val fs = p.getFileSystem(conf.value)
-  private val out = fs.create(p, true)
+  private var out: org.apache.hadoop.fs.FSDataOutputStream = _
+
+  private def breaks(s: String) = s.indexOf('\n') >= 0 || s.indexOf('\r') >= 0
 
   override def write(row: InternalRow): Unit = {
     if (!row.isNullAt(0)) {
       val key = row.getUTF8String(0).toString
       val value = if (row.isNullAt(1)) "" else row.getUTF8String(1).toString
-      if (key.isEmpty || key.indexOf(' ') >= 0 || key.indexOf('\n') >= 0)
+      if (key.isEmpty || key.indexOf(' ') >= 0 || breaks(key))
         throw new IllegalArgumentException(
-          s"graft-kv cannot represent key ${key.take(40)}: keys must be non-empty " +
-            "with no spaces or newlines (split_once-parse format)")
-      if (value.indexOf('\n') >= 0)
+          s"graft-kv: KVText cannot represent key '${key.take(40)}': keys must be " +
+            "non-empty with no spaces or line breaks (split_once-parse format)")
+      if (breaks(value))
         throw new IllegalArgumentException(
-          "graft-kv cannot represent newlines in values (line-oriented format)")
+          "graft-kv: KVText cannot represent line breaks in values (line-oriented format)")
+      if (out == null) out = fs.create(p, true)
       out.write(key.getBytes("UTF-8"))
       out.write(' ')
       out.write(value.getBytes("UTF-8"))
@@ -313,11 +329,14 @@ class KVDataWriter(file: String, conf: SerializableConfiguration)
     }
   }
 
-  override def commit(): WriterCommitMessage = { out.close(); KVCommitMessage(file) }
+  override def commit(): WriterCommitMessage = {
+    if (out != null) out.close()
+    KVCommitMessage(file)
+  }
   override def abort(): Unit = {
     // delete this task's partial output — a retry writes a fresh
     // task-scoped filename, so leftovers would double-count on read
-    try out.close() catch { case _: Throwable => () }
+    if (out != null) try out.close() catch { case _: Throwable => () }
     if (fs.exists(p)) fs.delete(p, false)
   }
   override def close(): Unit = ()

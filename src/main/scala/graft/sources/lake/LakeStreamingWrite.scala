@@ -15,6 +15,7 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafePr
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.graft.TaskHadoopConf
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
@@ -184,7 +185,7 @@ private[lake] object LakeStreamingWrites {
       sql.getConf(SQLConf.PARQUET_COMPRESSION).toUpperCase(java.util.Locale.ROOT))
     // data files exclude partition columns and spell PHYSICAL names
     // (column mapping); ParquetWriteSupport reads the schema from the
-    // conf, so it rides in the serialized box
+    // conf, so it rides to the tasks with it
     val dataSchema = StructType(visible.filterNot(f => partCols.contains(f.name)))
     val physDataSchema = Lake.toPhysical(dataSchema)
     ParquetWriteSupport.setSchema(physDataSchema, conf)
@@ -207,7 +208,7 @@ private[lake] object LakeStreamingWrites {
       querySchema.fieldNames.indexWhere(resolver(_, f.name)))
     new LakeStreamingWrite(qualified, queryId, querySchema, queryIdx, visible, partCols,
       layoutSpecs, levelNames, boundLevelExprs,
-      new HadoopConfBox(conf), sql.sessionLocalTimeZone, codec.name(),
+      TaskHadoopConf(conf), sql.sessionLocalTimeZone, codec.name(),
       compactEvery = intOpt("compactEvery", 0),
       compactMaxFilesPerPartition = intOpt("compactMaxFilesPerPartition", 8),
       compactTargetRowsPerFile = longOpt("compactTargetRowsPerFile", 4000000L),
@@ -224,17 +225,6 @@ private[lake] object LakeStreamingWrites {
   }
 }
 
-/** Java-serializable Hadoop `Configuration` (the standard write-out /
-  * read-back trick; avoids depending on Spark's internal wrapper). */
-private[lake] class HadoopConfBox(@transient var conf: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = conf.write(out)
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    conf = new Configuration(false)
-    conf.readFields(in)
-  }
-}
-
 private[lake] final case class LakeFilesMessage(files: Seq[(String, Long)])
     extends WriterCommitMessage
 
@@ -243,7 +233,7 @@ private[lake] class LakeStreamingWrite(qualifiedLakeDir: String, queryId: String
     lakeVisible: StructType, partCols: Seq[String],
     layoutSpecs: Seq[String], levelNames: Seq[String],
     boundLevelExprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-    confBox: HadoopConfBox, tz: String, codecName: String,
+    taskConf: TaskHadoopConf, tz: String, codecName: String,
     compactEvery: Int, compactMaxFilesPerPartition: Int,
     compactTargetRowsPerFile: Long, maxOpenWriters: Int) extends StreamingWrite {
 
@@ -251,7 +241,7 @@ private[lake] class LakeStreamingWrite(qualifiedLakeDir: String, queryId: String
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new LakeStreamingWriterFactory(qualifiedLakeDir, querySchema, queryIdx,
-      lakeVisible, partCols, levelNames, boundLevelExprs, confBox, tz, codecName,
+      lakeVisible, partCols, levelNames, boundLevelExprs, taskConf, tz, codecName,
       maxOpenWriters)
 
   private def stagedOf(messages: Array[WriterCommitMessage]): Seq[(String, Long)] =
@@ -307,7 +297,7 @@ private[lake] class LakeStreamingWrite(qualifiedLakeDir: String, queryId: String
 
   private def deleteStaged(staged: Seq[(String, Long)]): Unit = {
     val root = new Path(qualifiedLakeDir)
-    val fs = root.getFileSystem(confBox.conf)
+    val fs = root.getFileSystem(taskConf.value)
     staged.foreach { case (rel, _) => fs.delete(new Path(root, rel), false) }
   }
 }
@@ -316,13 +306,13 @@ private[lake] class LakeStreamingWriterFactory(qualifiedLakeDir: String,
     querySchema: StructType, queryIdx: Seq[Int],
     lakeVisible: StructType, partCols: Seq[String], levelNames: Seq[String],
     boundLevelExprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-    confBox: HadoopConfBox, tz: String, codecName: String,
+    taskConf: TaskHadoopConf, tz: String, codecName: String,
     maxOpenWriters: Int)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new LakeDataWriter(qualifiedLakeDir, querySchema, queryIdx, lakeVisible, partCols,
-      levelNames, boundLevelExprs, confBox.conf, tz, codecName, partitionId, taskId, epochId,
+      levelNames, boundLevelExprs, taskConf.value, tz, codecName, partitionId, taskId, epochId,
       maxOpenWriters)
 }
 

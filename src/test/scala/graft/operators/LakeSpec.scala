@@ -1889,8 +1889,11 @@ class LakeSpec extends SparkTestBase {
       case sc: FileSourceScanExec if sc.output.exists(_.name == "text") => sc }
     assert(dataScans.nonEmpty && dataScans.forall(_.supportsColumnar),
       s"the data scan must be the vectorized parquet scan, got:\n${df.queryExecution.executedPlan}")
-    assert(!df.queryExecution.executedPlan.toString.contains("graft-lake MoR"),
-      "the row-mode MoR scan must not plan when the graft extensions are installed")
+    assert(!nodes.exists {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.table.getClass.getName == "graft.sources.lake.LakeMorTable"
+      case _ => false
+    }, "no scan may read the LakeMorTable when the graft extensions are installed")
     assert(!df.queryExecution.optimizedPlan.exists(
       _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
       s"the deletion vectors must apply inside the scan, with no join:\n${df.queryExecution.optimizedPlan}")

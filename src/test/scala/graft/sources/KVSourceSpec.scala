@@ -125,4 +125,49 @@ class KVSourceSpec extends SparkTestBase {
       .collect().map(r => r.getString(0) -> r.getString(1).toLong).toMap
     assert(back == Map("a" -> 2L, "b" -> 2L, "c" -> 1L))
   }
+
+  test("CRLF lines read the same through KVText.read and graft-kv, with no trailing \\r") {
+    val dir = Files.createTempDirectory("kvcrlf").toString
+    Files.write(Paths.get(dir, "data.txt"),
+      "a 1\r\nb two words\r\nc lone\rcr\r\nd \r\nnospace\r\ne last".getBytes)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getString(1)).toSet
+    val kv = rows(spark.read.format("graft-kv").option("chunkSize", 5).load(dir))
+    assert(kv == rows(KVText.read(spark, dir)))
+    // only the \r that ends a CRLF line goes; a lone \r is data
+    assert(kv == Set("a" -> "1", "b" -> "two words", "c" -> "lone\rcr", "d" -> "", "e" -> "last"))
+  }
+
+  test("the writer refuses \\r in a key and in a value") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("kvcr").toString + "/bad"
+    def attempt(k: String, v: String): Throwable = intercept[Exception] {
+      Seq(("ok", "1"), (k, v)).toDF("key", "value").write.format("graft-kv").mode("overwrite").save(dir)
+    }
+    val key = attempt("a\rb", "v").getMessage
+    assert(key.contains("graft-kv") && key.contains("KVText cannot represent key"), key)
+    val value = attempt("k", "x\ry").getMessage
+    assert(value.contains("graft-kv") && value.contains("KVText cannot represent line breaks in values"), value)
+  }
+
+  test("written files are named part-*, one per non-empty task") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("kvnames").toString + "/out"
+    Seq(("a", "1"), ("b", "2")).toDF("key", "value").repartition(6)
+      .write.format("graft-kv").mode("overwrite").save(dir)
+    val names = new java.io.File(dir).list().filterNot(n => n.startsWith(".") || n.startsWith("_"))
+    assert(names.nonEmpty && names.length <= 2 && names.forall(_.matches("part-\\d{5}-\\d+\\.txt")),
+      names.mkString(", "))
+  }
+
+  test("KVText.read plans the graft-kv scan") {
+    val dir = Files.createTempDirectory("kvplan").toString
+    write(dir, Seq("k1 v1"))
+    val df = KVText.read(spark, dir)
+    df.collect()
+    val scans = df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan }
+    assert(scans.nonEmpty && scans.forall(_.isInstanceOf[graft.sources.kv.KVScan]),
+      df.queryExecution.executedPlan.toString)
+  }
 }

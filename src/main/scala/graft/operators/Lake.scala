@@ -1075,7 +1075,7 @@ object Lake {
         * it. */
       bloomCols: Option[Seq[String]] = None)
 
-  private def fsRoot(spark: SparkSession, lakeDir: String): (FileSystem, Path) = {
+  private[graft] def fsRoot(spark: SparkSession, lakeDir: String): (FileSystem, Path) = {
     val p = new Path(lakeDir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     (fs, fs.makeQualified(p))
@@ -1379,12 +1379,27 @@ object Lake {
             "tag); upgrade the reader library")
       }
     }
-    DeltaRecord(version, action, schemaJson, added.result(), removed.result(),
+    val rec = DeltaRecord(version, action, schemaJson, added.result(), removed.result(),
       rewrites.result(), ts, dvAdds.result(), dvDetached = dvDetached.result(),
       cdcFiles = cdcFiles.result(), dvRemoves = dvRemoves.result(), txn = txn,
       statRestates = restates.result(), checkAdds = kAdds.result(),
       checkDrops = kDrops.result(), layout = layout,
       postImages = postImages.result(), bloomCols = bloomCols)
+    // the torn-record tripwire: the counts [[renderDelta]] wrote into the
+    // header against the lines parsed, so a record cut at a line boundary
+    // fails instead of reading as a shorter commit. A header without a
+    // count (an older writer) leaves that count unchecked.
+    Seq(("add", rec.added.size),
+      ("data-add", rec.added.count { case (p, _) => !rec.rewrites(p) }),
+      ("remove", rec.removed.size), ("D", rec.dvAdds.size), ("C", rec.cdcFiles.size))
+      .zipWithIndex.foreach { case ((what, parsed), i) =>
+        header.lift(3 + i).flatMap(_.toIntOption).filter(_ != parsed).foreach { counted =>
+          throw new IllegalStateException(
+            s"delta record at version $version is torn: its header counts $counted " +
+              s"$what line(s) but the record holds $parsed")
+        }
+      }
+    rec
   }
 
   /** Checkpoints are written under the `v2` header: `v2` PROMISES a

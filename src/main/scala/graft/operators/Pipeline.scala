@@ -697,61 +697,40 @@ object Pipeline {
     * can stop between stage and publish and prove readers still see the
     * pre-delete lake. None = no tombstone hits the lake (nothing staged).
     *
-    * Job economy (the 100 TB accounting): ONE column-pruned pass over the
-    * lake's (id, partition) columns finds the affected partitions; the
-    * superseded file set is then pure driver-side string work against the
-    * manifest (partition membership is the path prefix — no `_metadata`
-    * census, no second scan); ONE pass over the affected files only
-    * counts rows and tombstone hits together (survivors = rows − hits,
-    * the audit's expectation); the stage write and its read-back audit
-    * also touch only affected partitions. Every per-partition/ per-file
-    * collect is bounded by the affected set, never the lake. */
+    * Job economy (the 100 TB accounting): [[affectedFiles]] finds the
+    * superseded files in ONE column-pruned pass; ONE pass over the
+    * affected files only counts rows and tombstone hits together
+    * (survivors = rows − hits, the audit's expectation); the stage write
+    * and its read-back audit also touch only affected partitions. */
   private[graft] def stageLakeDelete(spark: SparkSession, lakeDir: String,
       tombstones: DataFrame, tombIdCol: String, lakeIdCol: String,
       partitionCols: Seq[String]): Option[Lake.StagedCommit] = {
     val base = Lake.adopt(spark, lakeDir)
     val lake = Lake.readState(spark, lakeDir, base)
     val t = broadcast(tombstones.select(col(tombIdCol).as("_del")).distinct())
-    // pass 1 (id + partition columns only): which partitions are hit
-    val affectedRows = Lake.collectScalar(
-      lake.join(t, col(lakeIdCol) === col("_del"), "left_semi")
-        .select(partitionCols.map(col): _*).distinct())
-    if (affectedRows.isEmpty) None
-    else {
-      val affectedDirs = affectedRows.map(Lake.partitionDir(partitionCols, _)).toSeq
-      // the pre-image files this commit supersedes — including those of
-      // fully-tombstoned partitions, which stage zero survivor rows and
-      // therefore vanish from the manifest (the silent-retention fix)
-      val removed = Lake.filesUnder(base.files, affectedDirs)
-      val orphanDirs = affectedDirs.filterNot(d => removed.exists(_.startsWith(d + "/")))
-      if (orphanDirs.nonEmpty)
-        throw new IllegalStateException(
-          s"partition-dir rendering mismatch: ${orphanDirs.mkString(", ")} own no " +
-            "manifest files although tombstones were found in them — refusing to stage")
-      val affectedLake = Lake.readFiles(spark, lakeDir, base.schemaJson, removed, base.dvs)
-      // pass 2 RIDES the survivor write: one left join (t is distinct,
-      // so at most one match per lake row — the `_del IS NULL` filter is
-      // exactly the anti-join), with total rows and tombstone hits
-      // observed on the join node above the filter. The old shape paid
-      // a separate count+hits aggregate over the affected files — a
-      // whole extra pass per delete — to learn the same two numbers.
-      val joined = affectedLake.join(t, col(lakeIdCol) === col("_del"), "left")
-      val (instJoined, joinedRows, joinedExtras) = Lake.observedAuditMetrics(
-        Map.empty, joined, Seq(count(col("_del")).as("_gf_hits")))
-      val survivors = instJoined.filter(col("_del").isNull).drop("_del")
-      val staged = Lake.stageWrite(spark, lakeDir, survivors, partitionCols)
-      val expected = joinedRows() - joinedExtras()("_gf_hits").asInstanceOf[Long]
-      // audit read-back doubles as the stats capture: the rewritten
-      // files keep id-range stats so append pruning survives deletes
-      val (stagedRows, stagedStats) = Lake.auditStaged(spark, lakeDir,
-        base.schemaJson, staged, Seq(lakeIdCol))
-      // the deleted pre-image rows, written at commit time — what the
-      // row-level change feed serves as this version's 'delete' rows
-      val cdcPath = Lake.stageCdc(spark, lakeDir,
-        affectedLake.join(t, col(lakeIdCol) === col("_del"), "left_semi"), partitionCols)
-      Some(Lake.StagedCommit(lakeDir, base, "delete", base.schemaJson, removed, staged,
-        stagedRows, expected, stagedStats, rewriteFiles = staged.toSet,
-        cdcFiles = Seq((cdcPath, "delete"))))
+    staging(spark, lakeDir, base) { ledger =>
+      // pass 1 (id + partition columns only): the files of the partitions
+      // a tombstone hits — including those of fully-tombstoned
+      // partitions, which stage zero survivor rows and therefore vanish
+      // from the manifest (the silent-retention fix)
+      val removed = affectedFiles(base, lake, t, col(lakeIdCol) === col("_del"), partitionCols)
+      if (removed.isEmpty) None
+      else {
+        val affectedLake = Lake.readFiles(spark, lakeDir, base.schemaJson, removed, base.dvs)
+        // pass 2 RIDES the survivor write: one left join (t is distinct,
+        // so the `_del IS NULL` filter is exactly the anti-join), with
+        // total rows and tombstone hits observed on the join node.
+        val (instJoined, joinedRows, joinedExtras) = Lake.observedAuditMetrics(Map.empty,
+          affectedLake.join(t, col(lakeIdCol) === col("_del"), "left"),
+          Seq(count(col("_del")).as("_gf_hits")))
+        // the deleted pre-image rows, written at commit time — what the
+        // row-level change feed serves as this version's 'delete' rows
+        Some(rewrite(ledger, "delete", removed,
+          instJoined.filter(col("_del").isNull).drop("_del"),
+          () => joinedRows() - joinedExtras()("_gf_hits").asInstanceOf[Long],
+          affectedLake.join(t, col(lakeIdCol) === col("_del"), "left_semi"),
+          partitionCols, lakeIdCol, "delete"))
+      }
     }
   }
 
@@ -786,6 +765,12 @@ object Pipeline {
       |GROUP BY 1, 2 ORDER BY split, shard_id""".stripMargin
 
   // ---------------------------------------------------------------- px102
+  /** Census scans compactions performed (a [[Lake.logReads]]-style
+    * counter): the manifest-counted fast path pins ZERO — group maps and
+    * audit expectations both come from recorded `#rows`, so the corpus
+    * is read exactly once (the rewrite). */
+  private[graft] val censusReads = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** Shard compaction — the maintenance pass that undoes what incremental
     * writes and surgical deletes (px101) do to a lake: partitions
     * accumulate many small files, and small files tax every subsequent
@@ -814,12 +799,6 @@ object Pipeline {
     * leans on exactly that: the post-compaction manifest must equal the
     * relational manifest of the un-compacted data. The file-count and
     * parallel-write properties are pinned by the spec. */
-  /** Census scans compactions performed (a [[Lake.logReads]]-style
-    * counter): the manifest-counted fast path pins ZERO — group maps and
-    * audit expectations both come from recorded `#rows`, so the corpus
-    * is read exactly once (the rewrite). */
-  private[graft] val censusReads = new java.util.concurrent.atomic.AtomicLong(0L)
-
   def compactLake(spark: SparkSession, lakeDir: String,
       maxFilesPerPartition: Int = 1,
       targetRowsPerFile: Long = 4000000L,
@@ -870,11 +849,7 @@ object Pipeline {
         // recorded #bytes first (zero round-trips on a counted lake,
         // lazy-aware — a lazily-resolved state answers from one job over
         // the checkpoint entries); only pre-capture files pay a stat
-        lazy val hfsQ = {
-          val root = new org.apache.hadoop.fs.Path(lakeDir)
-          val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-          (hfs, hfs.makeQualified(root))
-        }
+        lazy val hfsQ = Lake.fsRoot(spark, lakeDir)
         val scoped = candidateSubtree
         val recorded = Lake.reservedPerFile(spark, base, scoped)
         val sizes = scoped.map { f =>
@@ -894,9 +869,7 @@ object Pipeline {
       // the rewrite layout passes the same shared gate as init/evolve —
       // a transform spec shadowing a schema column (or an identity
       // column spelled like a transform level) must refuse here too
-      Lake.validateLayout(partitionCols, Lake.visible(
-        org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]), "compactLake")
+      Lake.validateLayout(partitionCols, lakeSchemaOf(base), "compactLake")
       val removed = Lake.filesUnder(candidateSubtree, affectedDirs).filter(rewritable)
       // reading WITH the deletion vectors applied is what MATERIALIZES
       // them: the compacted replacement files carry only surviving rows,
@@ -1639,36 +1612,6 @@ object Pipeline {
   }
 
   // ---------------------------------------------------------------- px111
-  /** Row-level MERGE (upsert) — the correction pass every living corpus
-    * needs: re-scored quality columns, re-extracted text for a crawl
-    * subset, late-arriving replacements, plus genuinely new docs, all in
-    * ONE atomic commit. Matched ids (lake ∩ updates) are REPLACED by
-    * their update rows; unmatched update rows INSERT. Same surgical
-    * discipline as the delete, plus the per-file add-kind that keeps
-    * incremental consumers exact:
-    *
-    *   1. affected partitions = those holding a matched id (broadcast
-    *      semi-join on the id, partition membership from the manifest);
-    *   2. STAGE A: survivors of the affected partitions (anti-join on
-    *      the update ids) are rewritten — these files are tagged `AR`
-    *      (pre-image rewrites) in the delta;
-    *   3. STAGE B: the update rows themselves land as `A` (data) files
-    *      in whatever partitions their partition columns name — an
-    *      update may MOVE a doc across partitions (the old copy dies
-    *      with its rewritten partition, the new one lands where it now
-    *      belongs);
-    *   4. AUDIT both stages (survivors + upserts vs the pre-computed
-    *      expectation), PUBLISH one delta that removes the affected
-    *      pre-image and adds both file sets.
-    *
-    * [[Lake.changesBetween]] over a range spanning the merge surfaces
-    * exactly the UPSERTED rows (stage B) — never the rewritten
-    * survivors — which is precisely "what must I re-embed/re-train on".
-    * Updates must carry the lake's exact schema (a merge that drops or
-    * retypes columns is corruption, not evolution — refused); an upsert
-    * into an empty/missing lake is a plain first ingest. Raced merges
-    * follow [[Lake.publish]]'s OCC rules: a pure-insert merge rebases
-    * freely, a rewriting merge refuses on genuine overlap. */
   /** Ceiling on the estimated bytes of a merge's update-id set before
     * the semi/anti joins fall back from broadcast to shuffle. 256 MB of
     * build-side ids is comfortably inside a production executor heap
@@ -1698,6 +1641,36 @@ object Pipeline {
     updCount * perRow
   }
 
+  /** Row-level MERGE (upsert) — the correction pass every living corpus
+    * needs: re-scored quality columns, re-extracted text for a crawl
+    * subset, late-arriving replacements, plus genuinely new docs, all in
+    * ONE atomic commit. Matched ids (lake ∩ updates) are REPLACED by
+    * their update rows; unmatched update rows INSERT. Same surgical
+    * discipline as the delete, plus the per-file add-kind that keeps
+    * incremental consumers exact:
+    *
+    *   1. affected partitions = those holding a matched id
+    *      ([[affectedFiles]]);
+    *   2. STAGE A: survivors of the affected partitions (anti-join on
+    *      the update ids) are rewritten — these files are tagged `AR`
+    *      (pre-image rewrites) in the delta;
+    *   3. STAGE B: the update rows themselves land through
+    *      [[stageAdds]] in whatever partitions their partition columns
+    *      name — an update may MOVE a doc across partitions (the old
+    *      copy dies with its rewritten partition, the new one lands
+    *      where it now belongs);
+    *   4. AUDIT both stages (survivors + upserts vs the pre-computed
+    *      expectation), PUBLISH one delta that removes the affected
+    *      pre-image and adds both file sets.
+    *
+    * [[Lake.changesBetween]] over a range spanning the merge surfaces
+    * exactly the UPSERTED rows (stage B) — never the rewritten
+    * survivors — which is precisely "what must I re-embed/re-train on".
+    * The batch is prepared by [[upsertBatch]], which refuses updates
+    * that do not carry the lake's exact schema; an upsert into an
+    * empty/missing lake is a plain first ingest. Raced merges
+    * follow [[Lake.publish]]'s OCC rules: a pure-insert merge rebases
+    * freely, a rewriting merge refuses on genuine overlap. */
   def mergeIntoLake(spark: SparkSession, lakeDir: String, updates: DataFrame,
       idCol: String = "doc_id",
       partitionCols: Seq[String] = Seq("split", "shard_id"),
@@ -1705,119 +1678,36 @@ object Pipeline {
     val base = Lake.adopt(spark, lakeDir)
     if (base.files.isEmpty) // first-ever ingest: merge degenerates to append
       return appendToLake(spark, lakeDir, updates, idCol, partitionCols)
-    // materialized once: the id broadcast, the audit expectation, and the
-    // stage write all consume it; the block is update-batch-sized. The
-    // count + CHECK sums ride the eager checkpoint's materialization.
-    val (instUpd, updAudit) =
-      Lake.observedAudit(base.checks, updates.dropDuplicates(idCol))
-    val upd = instUpd.localCheckpoint(true)
-    val updCount = updAudit()
-    if (updCount == 0) return Lake.read(spark, lakeDir)
-    val lakeSchema = Lake.visible(
-      org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val lakeTypes = lakeSchema.map(f => f.name -> f.dataType).toMap
-    val uTypes = upd.schema.map(f => f.name -> f.dataType).toMap
-    require(lakeTypes == uTypes,
-      s"mergeIntoLake: updates schema must equal the lake schema exactly " +
-        s"(updates-only: ${(uTypes.keySet -- lakeTypes.keySet).mkString(", ")}; " +
-        s"lake-only: ${(lakeTypes.keySet -- uTypes.keySet).mkString(", ")}; " +
-        s"retyped: ${lakeTypes.keySet.intersect(uTypes.keySet)
-          .filter(c => lakeTypes(c) != uTypes(c)).mkString(", ")})")
-    val lake = Lake.readState(spark, lakeDir, base)
-    // broadcast the id set only while it plausibly fits executor memory —
-    // a corpus-wide re-scoring merge (updCount ~ corpus) must fall back
-    // to a shuffled semi/anti join, not blow the driver on a broadcast.
-    // The cutoff is a BYTE estimate, not a row count: 6M narrow numeric
-    // ids broadcast fine, while 1M wide string ids would be gigabytes
-    val ids0 = upd.select(col(idCol).as("_mid")).distinct()
-    val u =
-      if (estimatedIdSetBytes(upd, idCol, updCount) <= MergeBroadcastMaxBytes)
-        broadcast(ids0)
-      else ids0
-    // pass 1 (id + partition columns only): which partitions hold a match
-    val matchedParts = Lake.collectScalar(
-      lake.join(u, col(idCol) === col("_mid"), "left_semi")
-        .select(partitionCols.map(col): _*).distinct())
-    val affectedDirs = matchedParts.map(Lake.partitionDir(partitionCols, _)).toSeq
-    val removed = Lake.filesUnder(base.files, affectedDirs)
-    val orphanDirs = affectedDirs.filterNot(d => removed.exists(_.startsWith(d + "/")))
-    if (orphanDirs.nonEmpty)
-      throw new IllegalStateException(
-        s"partition-dir rendering mismatch: ${orphanDirs.mkString(", ")} own no " +
-          "manifest files although matches were found in them — refusing to stage")
-    // stage A: survivors of the affected partitions (pre-image rewrites);
-    // the REPLACED rows are written as a change-feed sidecar — the feed's
-    // update_preimage half of the upsert (its update_postimage half is
-    // stage B's matched files; unmatched source rows feed as inserts)
-    val (survStaged, survRows, survStats, survExpected, cdcFiles, affectedIds) =
-      if (removed.isEmpty)
-        (Seq.empty[String], 0L, Map.empty[String, Seq[Lake.ColStat]], 0L,
-          Seq.empty[(String, String)], None: Option[DataFrame])
-      else {
-        val affectedLake = Lake.readFiles(spark, lakeDir, base.schemaJson, removed, base.dvs)
-        // the survivor expectation rides the survivor WRITE itself as an
-        // observed metric (the same device every other DML audit uses):
-        // the old separate count+hits aggregate was one more full scan
-        // of the affected partitions plus a broadcast join, per merge.
-        // The audit stays two-channel — task-side observed count vs the
-        // staged files' own footer row counts.
-        val survivors = affectedLake.join(u, col(idCol) === col("_mid"), "left_anti")
-        val (instSurv, survAudit) = Lake.observedAudit(Map.empty, survivors)
-        val staged = Lake.stageWrite(spark, lakeDir, instSurv, partitionCols)
-        val expected =
-          try survAudit()
-          catch { case e: Throwable => Lake.deleteFiles(spark, lakeDir, staged); throw e }
-        val (rows, st) = Lake.auditStaged(spark, lakeDir, base.schemaJson, staged, Seq(idCol))
-        // the replaced pre-images ARE updates in upsert semantics — the
-        // feed serves them as update_preimage (Delta CDF parity)
-        val cdcPath = Lake.stageCdc(spark, lakeDir,
-          affectedLake.join(u, col(idCol) === col("_mid"), "left_semi"), partitionCols)
-        // matched ids for the stage-B split come from the
-        // already-materialized sidecar (one small read), not a second
-        // scan of the affected partitions
-        val cdcAbs = {
-          val pp = new org.apache.hadoop.fs.Path(lakeDir)
-          new org.apache.hadoop.fs.Path(
-            pp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(pp),
-            cdcPath).toString
-        }
-        val idPhys = org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-          .find(_.name == idCol).map(Lake.physicalName).getOrElse(idCol)
-        (staged, rows, st, expected, Seq((cdcPath, "update_preimage")),
-          Some(Lake.openStagedCdc(spark, cdcAbs, base.schemaJson, withLineage = false)
-            .select(col(idPhys).as("_lakeid"))))
+    dml(spark, lakeDir, base, vacuumSuperseded = !retainHistory) { ledger =>
+      upsertBatch("mergeIntoLake", base, updates, idCol).map { batch =>
+        val on = col(idCol) === col("_mid")
+        val removed = affectedFiles(base, Lake.readState(spark, lakeDir, base), batch.ids,
+          on, partitionCols)
+        // stage A: survivors of the affected partitions (pre-image
+        // rewrites); the REPLACED rows are written as a change-feed
+        // sidecar — the feed's update_preimage half of the upsert (Delta
+        // CDF parity; its update_postimage half is stage B's matched
+        // files, and unmatched source rows feed as inserts)
+        val rewritten =
+          if (removed.isEmpty) None
+          else {
+            val affectedLake = Lake.readFiles(spark, lakeDir, base.schemaJson, removed, base.dvs)
+            val (instSurv, survAudit) = Lake.observedAudit(Map.empty,
+              affectedLake.join(batch.ids, on, "left_anti"))
+            Some(rewrite(ledger, "merge", removed, instSurv, survAudit,
+              affectedLake.join(batch.ids, on, "left_semi"), partitionCols, idCol,
+              "update_preimage"))
+          }
+        val adds = stageAdds(ledger, upsertAdds(batch, idCol, rewritten.map(sc =>
+          preImage(ledger, sc.cdcFiles.head._1, withLineage = false))), "ins",
+          Map.empty, partitionCols, Seq(idCol))
+        val sc = rewritten.getOrElse(
+          Lake.StagedCommit(lakeDir, base, "merge", base.schemaJson, Nil, Nil, 0L, 0L))
+        sc.copy(stagedFiles = sc.stagedFiles ++ adds.post ++ adds.ins,
+          stagedRows = sc.stagedRows + adds.rows, expectedRows = sc.expectedRows + batch.count,
+          stagedStats = sc.stagedStats ++ adds.stats, postImageFiles = adds.post.toSet)
       }
-    // stage B: the upserts — POST-IMAGES (source rows whose id matched)
-    // and genuine inserts land as SEPARATE files through ONE tagged
-    // write (the staging-only _gm_kind level strips on move), so the
-    // change feed tags update_postimage vs insert exactly at the same
-    // write cost as the untyped upsert
-    val updCols = upd.select(lakeSchema.map(f => col(f.name)): _*)
-    val tagged = affectedIds match {
-      case None =>
-        Map("ins" -> Lake.stageWrite(spark, lakeDir, updCols, partitionCols))
-      case Some(ids) =>
-        Lake.stageWriteTagged(spark, lakeDir,
-          updCols.join(ids.distinct(), col(idCol) === col("_lakeid"), "left")
-            .withColumn("_gm_kind",
-              when(col("_lakeid").isNotNull, lit("post")).otherwise(lit("ins")))
-            .drop("_lakeid"),
-          "_gm_kind", partitionCols)
     }
-    val postStaged = tagged.getOrElse("post", Seq.empty)
-    val insStaged = tagged.getOrElse("ins", Seq.empty)
-    val upStaged = postStaged ++ insStaged
-    val (upRows, upStats) = Lake.auditStaged(spark, lakeDir, base.schemaJson,
-      upStaged, Seq(idCol))
-    Lake.publish(spark,
-      Lake.StagedCommit(lakeDir, base, "merge", base.schemaJson, removed,
-        survStaged ++ upStaged, survRows + upRows, survExpected + updCount,
-        survStats ++ upStats, rewriteFiles = survStaged.toSet, cdcFiles = cdcFiles,
-        postImageFiles = postStaged.toSet),
-      vacuumSuperseded = !retainHistory)
-    Lake.read(spark, lakeDir)
   }
 
   /** SPARSE (merge-on-read) deletion: commits per-row TOMBSTONES —
@@ -1831,61 +1721,21 @@ object Pipeline {
     * lineage ([[Lake.readFiles]]); [[compactLake]] materializes them back
     * into plain files and drops the attachments.
     *
-    * Same commit discipline as every mutation: stage (the sidecar write,
-    * invisible until publish), audit (sidecar read-back count vs the
-    * matched-row count), publish (one delta carrying `D` attachment
-    * lines; OCC rebase with refusal when an interposed commit removed a
-    * tombstoned file or appended into a tombstoned partition). Candidate
-    * files prune by the manifest's id stats before a single row is read.
-    * Already-deleted rows can never re-tombstone (lineage reads apply
-    * existing vectors first), so the operation is idempotent. */
+    * Same commit discipline as every mutation ([[sparseDelete]]: the
+    * [[tombstone]] step, then one publish whose delta carries `D`
+    * attachment lines; OCC rebase with refusal when an interposed commit
+    * removed a tombstoned file or appended into a tombstoned partition).
+    * Candidate files prune by the manifest's id stats and blooms
+    * ([[keyCandidates]]) before a single row is read. Already-deleted
+    * rows can never re-tombstone (lineage reads apply existing vectors
+    * first), so the operation is idempotent. */
   def deleteFromLakeSparse(spark: SparkSession, lakeDir: String, tombstones: DataFrame,
       tombIdCol: String, lakeIdCol: String = "doc_id"): DataFrame = {
-    val base = Lake.adopt(spark, lakeDir)
-    if (base.files.isEmpty) return Lake.read(spark, lakeDir)
     val t = broadcast(tombstones.select(col(tombIdCol).as("_del")).distinct())
-    val bounds = Lake.collectScalar(tombstones
-      .agg(min(col(tombIdCol)), max(col(tombIdCol)), count(col(tombIdCol))))(0)
-    if (bounds.isNullAt(0)) return Lake.read(spark, lakeDir) // no tombstones
-    // stats first (free, driver-side), then per-file blooms for the
-    // keys min/max cannot prune (uniformly-distributed ids)
-    val candidates = Lake.bloomPrune(spark, lakeDir, base,
-      Lake.pruneByStats(base, lakeIdCol,
-        tombstones.schema(tombIdCol).dataType, bounds.get(0), bounds.get(1)),
-      lakeIdCol, t.select(col("_del")), bounds.getLong(2))
-    if (candidates.isEmpty) return Lake.read(spark, lakeDir)
-    // one column-pruned pass over the candidates: the tombstoned rows'
-    // (file, pos) coordinates, with existing vectors already applied
-    val lineage = Lake.readFilesWithLineage(spark, lakeDir, base.schemaJson,
-      candidates, base.dvs)
-    val matched = lineage.join(t, col(lakeIdCol) === col("_del"), "left_semi")
-    // ONE pass over the matched rows writes the change-feed sidecar (the
-    // deleted pre-image, row lineage riding along as extra columns) WITH
-    // the audit count riding it as an observed metric — the old separate
-    // count() was a second full scan of the candidates. The deletion
-    // vector then derives from the SIDECAR's read-back — the lake is
-    // never scanned a second time. No checks: deletes REMOVE rows.
-    val (instrumented, audit) = Lake.observedAudit(Map.empty, matched)
-    val cdcPath = Lake.stageCdc(spark, lakeDir, instrumented, Lake.layoutSpecsOf(base))
-    val expected = audit()
-    val root = {
-      val pp = new org.apache.hadoop.fs.Path(lakeDir)
-      pp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(pp)
-    }
-    if (expected == 0L) { // roll the empty (invisible) sidecar dir back
-      root.getFileSystem(spark.sessionState.newHadoopConf())
-        .delete(new org.apache.hadoop.fs.Path(root, cdcPath), true)
-      return Lake.read(spark, lakeDir)
-    }
-    val cdcAbs = new org.apache.hadoop.fs.Path(root, cdcPath).toString
-    val back = Lake.openStagedCdc(spark, cdcAbs, base.schemaJson, withLineage = true)
-    val (sidecar, stagedRows, files) = Lake.stageDv(spark, lakeDir,
-      back.select(col("_gf_file").as("file"), col("_gf_pos").as("pos")))
-    Lake.publish(spark, Lake.StagedCommit(lakeDir, base, "delete", base.schemaJson,
-      Seq.empty, Seq.empty, stagedRows, expected,
-      dvAdds = files.map(f => f -> Seq(sidecar)).toMap,
-      cdcFiles = Seq((cdcPath, "delete"))))
-    Lake.read(spark, lakeDir)
+    sparseDelete(spark, lakeDir)(base =>
+      keyCandidates(spark, lakeDir, base, lakeIdCol, tombstones.schema(tombIdCol).dataType,
+        t.select(col("_del")), keyBounds(tombstones, col(tombIdCol))))(
+      _.join(t, col(lakeIdCol) === col("_del"), "left_semi"))
   }
 
   /** [[deleteFromLakeSparse]] for an arbitrary PREDICATE instead of a
@@ -1894,116 +1744,74 @@ object Pipeline {
     * to what the predicate reads plus row lineage), tombstones every
     * matching row by deletion vector, writes the purged pre-image to the
     * change-feed sidecar, commits once. The predicate's stats-prunable
-    * conjuncts (range/equality against literals —
-    * [[org.apache.spark.sql.graft.LakeStatPruning.boundsFrom]], the same
-    * translation the DSv2 read uses) prune the CANDIDATE FILE LIST
-    * against the manifest's per-file min/max before a single row is
-    * read, so a range purge on a clustered lake scans only the
-    * overlapping files; predicates with no extractable bounds scan
-    * everything (exactness-preserving, like all stats pruning here). */
+    * conjuncts prune the candidate file list first
+    * ([[sparseWhereCandidates]]), so a range purge on a clustered lake
+    * scans only the overlapping files; predicates with no extractable
+    * bounds scan everything (exactness-preserving, like all stats
+    * pruning here). */
   def deleteFromLakeSparseWhere(spark: SparkSession, lakeDir: String,
-      predicate: org.apache.spark.sql.Column): DataFrame = {
+      predicate: org.apache.spark.sql.Column): DataFrame =
+    sparseDelete(spark, lakeDir)(sparseWhereCandidates(spark, lakeDir, _, predicate))(
+      _.filter(predicate))
+
+  /** The one sparse delete: `candidatesOf` names the files that may hold
+    * a match (asked only of a non-empty lake), `matching` picks the
+    * matched rows out of their lineage read, and [[tombstoneMatches]]
+    * commits them as one `delete`. No checks: deletes REMOVE rows. */
+  private def sparseDelete(spark: SparkSession, lakeDir: String)(
+      candidatesOf: Lake.LakeState => Seq[String])(
+      matching: DataFrame => DataFrame): DataFrame = {
     val base = Lake.adopt(spark, lakeDir)
-    if (base.files.isEmpty) return Lake.read(spark, lakeDir)
-    val candidates = sparseWhereCandidates(spark, lakeDir, base, predicate)
-    if (candidates.isEmpty) return Lake.read(spark, lakeDir)
-    val lineage = Lake.readFilesWithLineage(spark, lakeDir, base.schemaJson,
-      candidates, base.dvs)
-    val matched = lineage.filter(predicate)
-    // audit count rides the sidecar write (was a second candidate scan)
-    val (instrumented, audit) = Lake.observedAudit(Map.empty, matched)
-    val cdcPath = Lake.stageCdc(spark, lakeDir, instrumented, Lake.layoutSpecsOf(base))
-    val expected = audit()
-    val root = {
-      val pp = new org.apache.hadoop.fs.Path(lakeDir)
-      pp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(pp)
+    dml(spark, lakeDir, base) { ledger =>
+      tombstoneMatches(ledger, if (base.files.isEmpty) Nil else candidatesOf(base),
+        "delete")(matching).map(t => sparseCommit(ledger, "delete", Some(t), NoAdds, t.matched))
     }
-    if (expected == 0L) { // roll the empty (invisible) sidecar dir back
-      root.getFileSystem(spark.sessionState.newHadoopConf())
-        .delete(new org.apache.hadoop.fs.Path(root, cdcPath), true)
-      return Lake.read(spark, lakeDir)
-    }
-    val cdcAbs = new org.apache.hadoop.fs.Path(root, cdcPath).toString
-    val back = Lake.openStagedCdc(spark, cdcAbs, base.schemaJson, withLineage = true)
-    val (sidecar, stagedRows, files) = Lake.stageDv(spark, lakeDir,
-      back.select(col("_gf_file").as("file"), col("_gf_pos").as("pos")))
-    Lake.publish(spark, Lake.StagedCommit(lakeDir, base, "delete", base.schemaJson,
-      Seq.empty, Seq.empty, stagedRows, expected,
-      dvAdds = files.map(f => f -> Seq(sidecar)).toMap,
-      cdcFiles = Seq((cdcPath, "delete"))))
-    Lake.read(spark, lakeDir)
   }
 
   /** SPARSE row-level UPDATE — "SET col = expr WHERE pred" as ONE
-    * deletion-vector commit: matched rows tombstone by vector (their
-    * pre-image feeding the CDC sidecar as `update_preimage`), the
-    * updated post-image rows land as genuinely-new `AU` data files
-    * (feeding as `update_postimage` — the Delta CDF contract), zero
-    * survivor files rewritten. Assignment expressions
-    * may reference the row's own columns (`SET n = n + 1`) — they
-    * evaluate over the matched pre-image — and may move rows across
-    * partitions (the staged write re-partitions). Candidate files
-    * stats-prune from the predicate's bounds exactly like the sparse
-    * delete. Unassigned columns carry over unchanged. */
+    * deletion-vector commit: matched rows tombstone by vector
+    * ([[tombstone]]; their pre-image feeds the change feed as
+    * `update_preimage`), the updated post-image rows land as
+    * genuinely-new `AU` data files ([[stageAdds]]; fed as
+    * `update_postimage` — the Delta CDF contract), zero survivor files
+    * rewritten. Assignment expressions may reference the row's own
+    * columns (`SET n = n + 1`) — they evaluate over the matched
+    * pre-image — and may move rows across partitions (the staged write
+    * re-partitions). Candidate files stats-prune from the predicate's
+    * bounds exactly like the sparse delete. Unassigned columns carry
+    * over unchanged. */
   def updateLakeSparseWhere(spark: SparkSession, lakeDir: String,
       predicate: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column]): DataFrame = {
     val base = Lake.adopt(spark, lakeDir)
     if (base.files.isEmpty) return Lake.read(spark, lakeDir)
-    val lakeSchema = Lake.visible(
-      org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    val lakeSchema = lakeSchemaOf(base)
     val unknown = assignments.keySet.filterNot(lakeSchema.fieldNames.contains)
     require(unknown.isEmpty,
       s"updateLakeSparseWhere: SET names unknown column(s) ${unknown.mkString(", ")}")
     val candidates = sparseWhereCandidates(spark, lakeDir, base, predicate)
     if (candidates.isEmpty) return Lake.read(spark, lakeDir)
     val partitionCols = Lake.layoutSpecsOf(base)
-    val lineage = Lake.readFilesWithLineage(spark, lakeDir, base.schemaJson,
-      candidates, base.dvs)
     // the checkpoint STAYS (two consumers: the CDC pre-image write and
     // the post-image stage); the audit count rides its EAGER
     // materialization as an observed metric instead of a separate count
-    val (instMatched, matchedAudit) =
-      Lake.observedAudit(Map.empty, lineage.filter(predicate))
+    val (instMatched, matchedAudit) = Lake.observedAudit(Map.empty,
+      Lake.readFilesWithLineage(spark, lakeDir, base.schemaJson, candidates, base.dvs)
+        .filter(predicate))
     val matched = instMatched.localCheckpoint(true)
     val expected = matchedAudit()
     if (expected == 0L) return Lake.read(spark, lakeDir)
-    // pre-image first (one pass): CDC delete sidecar, DV from its read-back
-    val cdcPath = Lake.stageCdc(spark, lakeDir, matched, partitionCols)
-    val root = {
-      val pp = new org.apache.hadoop.fs.Path(lakeDir)
-      pp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(pp)
+    dml(spark, lakeDir, base) { ledger =>
+      val tomb = tombstone(ledger, matched, partitionCols, Some(expected))(
+        cdc => Seq((cdc, "update_preimage")))
+      // post-image: assignments applied over the matched pre-image rows,
+      // cast back to the column's recorded type (SQL UPDATE semantics)
+      val updated = matched.select(lakeSchema.map { f =>
+        assignments.get(f.name).fold(col(f.name))(_.cast(f.dataType)).as(f.name)
+      }: _*)
+      val adds = stageAdds(ledger, updated, "post", base.checks, partitionCols, Seq.empty)
+      Some(sparseCommit(ledger, "update", tomb, adds, expected * 2))
     }
-    val cdcAbs = new org.apache.hadoop.fs.Path(root, cdcPath).toString
-    val back = Lake.openStagedCdc(spark, cdcAbs, base.schemaJson, withLineage = true)
-    val (sidecar, dvRows, dvFiles) = Lake.stageDv(spark, lakeDir,
-      back.select(col("_gf_file").as("file"), col("_gf_pos").as("pos")))
-    // post-image: assignments applied over the matched pre-image rows,
-    // cast back to the column's recorded type (SQL UPDATE semantics)
-    val updated = matched.select(lakeSchema.map { f =>
-      assignments.get(f.name).fold(col(f.name))(_.cast(f.dataType)).as(f.name)
-    }: _*)
-    // the post-image is the row-ADDING half: its CHECK audit rides the
-    // stage write (the old enforceChecks was a separate aggregate job)
-    val (instUpdated, updatedAudit) = Lake.observedAudit(base.checks, updated)
-    val upStaged = Lake.stageWrite(spark, lakeDir, instUpdated, partitionCols)
-    try updatedAudit()
-    catch { case e: Throwable =>
-      Lake.deleteFiles(spark, lakeDir, upStaged)
-      val fs2 = root.getFileSystem(spark.sessionState.newHadoopConf())
-      fs2.delete(new org.apache.hadoop.fs.Path(root, cdcPath), true)
-      fs2.delete(new org.apache.hadoop.fs.Path(root, sidecar), true)
-      throw e
-    }
-    val (upRows, upStats) = Lake.auditStaged(spark, lakeDir, base.schemaJson,
-      upStaged, Seq.empty)
-    Lake.publish(spark, Lake.StagedCommit(lakeDir, base, "update", base.schemaJson,
-      Seq.empty, upStaged, dvRows + upRows, expected * 2, upStats,
-      dvAdds = dvFiles.map(f => f -> Seq(sidecar)).toMap,
-      cdcFiles = Seq((cdcPath, "update_preimage")),
-      postImageFiles = upStaged.toSet))
-    Lake.read(spark, lakeDir)
   }
 
   /** The candidate files of a predicate-form sparse mutation: the
@@ -2019,9 +1827,7 @@ object Pipeline {
   private[graft] def sparseWhereCandidates(spark: SparkSession, lakeDir: String,
       base: Lake.LakeState,
       predicate: org.apache.spark.sql.Column): Seq[String] = {
-    val schema = Lake.visible(
-      org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    val schema = lakeSchemaOf(base)
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val conds = empty.filter(predicate).queryExecution.analyzed.collect {
@@ -2053,109 +1859,19 @@ object Pipeline {
     // the committed layout is authoritative for an existing lake —
     // exactly as in [[appendToLake]]
     val effectiveCols = Lake.layoutSpecsOf(base)
-    // count + CHECK sums + the id bounds for stats pruning ALL ride the
-    // eager checkpoint's own materialization (the batch is row-ADDING:
-    // upserts must satisfy the constraints) — the bounds used to be a
-    // second aggregate job over the just-checkpointed batch
-    val (instUpd, updAudit, updExtras) = Lake.observedAuditMetrics(base.checks,
-      updates.dropDuplicates(idCol),
-      Seq(min(col(idCol)).as("_gf_mn"), max(col(idCol)).as("_gf_mx")))
-    val upd = instUpd.localCheckpoint(true)
-    val updCount = updAudit()
-    if (updCount == 0) return Lake.read(spark, lakeDir)
-    val lakeSchema = Lake.visible(
-      org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val lakeTypes = lakeSchema.map(f => f.name -> f.dataType).toMap
-    val uTypes = upd.schema.map(f => f.name -> f.dataType).toMap
-    require(lakeTypes == uTypes,
-      s"mergeIntoLakeSparse: updates schema must equal the lake schema exactly " +
-        s"(updates-only: ${(uTypes.keySet -- lakeTypes.keySet).mkString(", ")}; " +
-        s"lake-only: ${(lakeTypes.keySet -- uTypes.keySet).mkString(", ")}; " +
-        s"retyped: ${lakeTypes.keySet.intersect(uTypes.keySet)
-          .filter(c => lakeTypes(c) != uTypes(c)).mkString(", ")})")
-    val ids0 = upd.select(col(idCol).as("_mid")).distinct()
-    val u =
-      if (estimatedIdSetBytes(upd, idCol, updCount) <= MergeBroadcastMaxBytes)
-        broadcast(ids0)
-      else ids0
-    // tombstone the matched pre-image rows: stats-pruned candidates,
-    // then bloom-pruned for keys whose distribution defeats min/max
-    val bounds = updExtras()
-    val candidates =
-      if (bounds("_gf_mn") == null) Seq.empty[String]
-      else Lake.bloomPrune(spark, lakeDir, base,
-        Lake.pruneByStats(base, idCol, upd.schema(idCol).dataType,
-          bounds("_gf_mn"), bounds("_gf_mx")),
-        idCol, upd.select(col(idCol)), updCount)
-    val (dvAdds, dvRows, matchedExpected, cdcFiles, matchedIds) =
-      if (candidates.isEmpty)
-        (Map.empty[String, Seq[String]], 0L, 0L, Seq.empty[(String, String)],
-          None: Option[DataFrame])
-      else {
-        val lineage = Lake.readFilesWithLineage(spark, lakeDir, base.schemaJson,
-          candidates, base.dvs)
-        val matched = lineage.join(u, col(idCol) === col("_mid"), "left_semi")
-        // change-feed sidecar first (one lake pass) with the audit count
-        // riding it — the old separate count() was a second candidate
-        // scan; the deletion vector derives from the sidecar's own
-        // read-back. Matched pre-images ARE updates in upsert semantics
-        // (CDF parity). No checks here: pre-images are rows REMOVED.
-        val (instMatched, matchedAudit) = Lake.observedAudit(Map.empty, matched)
-        val cdcPath = Lake.stageCdc(spark, lakeDir, instMatched, effectiveCols)
-        val expected = matchedAudit()
-        val root = {
-          val pp = new org.apache.hadoop.fs.Path(lakeDir)
-          pp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(pp)
-        }
-        if (expected == 0L) { // roll the empty (invisible) sidecar back
-          root.getFileSystem(spark.sessionState.newHadoopConf())
-            .delete(new org.apache.hadoop.fs.Path(root, cdcPath), true)
-          (Map.empty[String, Seq[String]], 0L, 0L, Seq.empty[(String, String)],
-            None: Option[DataFrame])
-        } else {
-          val cdcAbs = new org.apache.hadoop.fs.Path(root, cdcPath).toString
-          val back = Lake.openStagedCdc(spark, cdcAbs, base.schemaJson, withLineage = true)
-          val (sidecar, n, files) = Lake.stageDv(spark, lakeDir,
-            back.select(col("_gf_file").as("file"), col("_gf_pos").as("pos")))
-          // matched ids come from the already-materialized sidecar
-          // (physical names on disk), not a re-scan of the candidates
-          val idPhys = org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-            .find(_.name == idCol).map(Lake.physicalName).getOrElse(idCol)
-          (files.map(f => f -> Seq(sidecar)).toMap, n, expected,
-            Seq((cdcPath, "update_preimage")),
-            Some(back.select(col(idPhys).as("_lakeid"))))
-        }
+    dml(spark, lakeDir, base) { ledger =>
+      upsertBatch("mergeIntoLakeSparse", base, updates, idCol).map { batch =>
+        // tombstone the matched pre-image rows of the key-pruned candidates;
+        // matched pre-images ARE updates in upsert semantics (CDF parity)
+        val candidates = keyCandidates(spark, lakeDir, base, idCol,
+          batch.rows.schema(idCol).dataType, batch.rows.select(col(idCol)), batch.bounds)
+        val tomb = tombstoneMatches(ledger, candidates, "update_preimage")(
+          _.join(batch.ids, col(idCol) === col("_mid"), "left_semi"))
+        val adds = stageAdds(ledger, upsertAdds(batch, idCol, tomb.map(_.preImage)),
+          "ins", Map.empty, effectiveCols, Seq(idCol))
+        sparseCommit(ledger, "merge", tomb, adds, tomb.fold(0L)(_.matched) + batch.count)
       }
-    // the upserts land as genuinely-new data files: POST-IMAGES (matched
-    // ids) and genuine inserts as SEPARATE files through ONE tagged
-    // write (the staging-only _gm_kind level strips on move) — the
-    // change feed tags update_postimage vs insert exactly at the same
-    // write cost as the untyped upsert
-    val updCols = upd.select(lakeSchema.map(f => col(f.name)): _*)
-    val tagged = matchedIds match {
-      case None =>
-        Map("ins" -> Lake.stageWrite(spark, lakeDir, updCols, effectiveCols))
-      case Some(ids) =>
-        Lake.stageWriteTagged(spark, lakeDir,
-          updCols.join(ids.distinct(), col(idCol) === col("_lakeid"), "left")
-            .withColumn("_gm_kind",
-              when(col("_lakeid").isNotNull, lit("post")).otherwise(lit("ins")))
-            .drop("_lakeid"),
-          "_gm_kind", effectiveCols)
     }
-    val postStaged = tagged.getOrElse("post", Seq.empty)
-    val insStaged = tagged.getOrElse("ins", Seq.empty)
-    val upStaged = postStaged ++ insStaged
-    val (upRows, upStats) = Lake.auditStaged(spark, lakeDir, base.schemaJson,
-      upStaged, Seq(idCol))
-    Lake.publish(spark,
-      Lake.StagedCommit(lakeDir, base, "merge", base.schemaJson,
-        Seq.empty, upStaged, dvRows + upRows, matchedExpected + updCount,
-        upStats, dvAdds = dvAdds, cdcFiles = cdcFiles,
-        postImageFiles = postStaged.toSet))
-    Lake.read(spark, lakeDir)
   }
 
   /** One clause of the GENERAL sparse merge ([[mergeIntoLakeGeneral]]):
@@ -2174,8 +1890,8 @@ object Pipeline {
     * MATCHED BY SOURCE` — everything [[mergeIntoLakeSparse]]'s upsert
     * fast path cannot express — landing as ONE sparse commit exactly
     * like the simple shapes: every affected pre-image row tombstones by
-    * deletion vector (feeding the change feed as deletes), post-images
-    * and inserts land as genuinely-new data files, zero survivor files
+    * deletion vector ([[tombstone]]), post-images and inserts land as
+    * genuinely-new data files ([[stageAdds]]), zero survivor files
     * rewritten.
     *
     * Execution is ONE full-outer join between the (stats-pruned)
@@ -2186,22 +1902,21 @@ object Pipeline {
     * CASE over the clause conditions, evaluated once over the
     * checkpointed join. With no NOT-MATCHED-BY-SOURCE clause the
     * target side prunes to the files overlapping the source key range
-    * (manifest stats); with one, every target row is in play by
+    * ([[keyCandidates]]); with one, every target row is in play by
     * definition — the same honest full-scan Delta prices that clause
     * at. Duplicate source keys dedupe (last-writer-arbitrary) rather
     * than raising ANSI MERGE's cardinality error — the documented
     * divergence shared with [[mergeIntoLakeSparse]]; null-key source
     * rows are NOT deduped (null never matches — each inserts). CHECK
-    * constraints
-    * gate the added rows exactly like every other row-adding path. */
+    * constraints gate the added rows exactly like every other
+    * row-adding path: their audit rides the add write. */
   def mergeIntoLakeGeneral(spark: SparkSession, lakeDir: String,
       source: DataFrame, idCol: String, srcKey: org.apache.spark.sql.Column,
       matched: Seq[MergeClause], notMatched: Seq[MergeClause],
       notMatchedBySource: Seq[MergeClause]): DataFrame = {
-    import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
     val base = Lake.adopt(spark, lakeDir)
-    val lakeSchema = Lake.visible(
-      DataType.fromJson(base.schemaJson).asInstanceOf[StructType])
+    val lakeSchema = lakeSchemaOf(base)
     require(lakeSchema.fieldNames.contains(idCol),
       s"mergeIntoLakeGeneral: merge key '$idCol' is not a lake column")
     val partitionCols = Lake.layoutSpecsOf(base)
@@ -2225,26 +1940,17 @@ object Pipeline {
       .drop("_gm_nk")
       .withColumn("_gm_sp", lit(true))
     // candidate files: a NOT MATCHED BY SOURCE clause puts every target
-    // row in play; otherwise manifest stats prune to the key range
+    // row in play; otherwise the source keys prune them
     val candidates =
       if (notMatchedBySource.nonEmpty) base.files
-      else {
-        val b = Lake.collectScalar(src
-          .agg(min(col("_gm_sk")), max(col("_gm_sk")), count(col("_gm_sk"))))(0)
-        if (b.isNullAt(0)) Seq.empty[String]
-        else Lake.bloomPrune(spark, lakeDir, base,
-          Lake.pruneByStats(base, idCol, lakeSchema(idCol).dataType,
-            b.get(0), b.get(1)),
-          idCol, src.filter(col("_gm_sk").isNotNull).select(col("_gm_sk")),
-          b.getLong(2))
-      }
+      else keyCandidates(spark, lakeDir, base, idCol, lakeSchema(idCol).dataType,
+        src.filter(col("_gm_sk").isNotNull).select(col("_gm_sk")),
+        keyBounds(src, col("_gm_sk")))
     val tgt =
-      if (candidates.isEmpty) {
-        val sch = StructType(lakeSchema.fields ++ Seq(
-          StructField("_gf_file", StringType), StructField("_gf_pos", LongType)))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-      } else Lake.readFilesWithLineage(spark, lakeDir, base.schemaJson,
+      if (candidates.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          lakeSchema.add("_gf_file", StringType).add("_gf_pos", LongType))
+      else Lake.readFilesWithLineage(spark, lakeDir, base.schemaJson,
         candidates, base.dvs)
     val tgtP = tgt.select(
       lakeSchema.fieldNames.toSeq.map(c => col(c).as("_t_" + c))
@@ -2303,89 +2009,282 @@ object Pipeline {
     val cpRdds = joined.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
-    try {
-    val counts = joinedExtras()
-    def cnt(k: String): Long =
-      Option(counts(k)).fold(0L)(_.asInstanceOf[Long])
-    val (tombDel, tombUpd, addPost, addIns) =
-      (cnt("_gf_tdel"), cnt("_gf_tupd"), cnt("_gf_apost"), cnt("_gf_ains"))
-    val tombExpected = tombDel + tombUpd
-    val addExpected = addPost + addIns
-    if (tombExpected == 0L && addExpected == 0L) return Lake.read(spark, lakeDir)
-
-    // tombstones: every matched / not-matched-by-source row whose clause
-    // fires (updates tombstone their pre-image too). ONE pass writes
-    // BOTH change types' pre-images: the sidecar partitions by a
-    // leading `_gm_ct` level, and each `_gm_ct=<type>/` subtree IS a
-    // standard sidecar dir (partitionCols layout below it) that the
-    // feed's `C` entries point at individually. The deletion vector
-    // derives from the combined read-back — one more small-read job.
-    val (dvAdds, dvRows, cdcFiles) =
-      if (tombExpected == 0L)
-        (Map.empty[String, Seq[String]], 0L, Seq.empty[(String, String)])
-      else {
-        val root = {
-          val pp = new org.apache.hadoop.fs.Path(lakeDir)
-          pp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(pp)
-        }
-        val pre = joined.filter(tombCond).select(
-          lakeSchema.fieldNames.toSeq.map(c => col("_t_" + c).as(c))
-            ++ Seq(col("_gf_file"), col("_gf_pos"),
-              when(tombDelCond, lit("delete"))
-                .otherwise(lit("update_preimage")).as("_gm_ct")): _*)
-        val cdcPath = Lake.stageCdc(spark, lakeDir, pre,
-          "_gm_ct" +: partitionCols)
-        val staged =
+    try dml(spark, lakeDir, base) { ledger =>
+      val counts = joinedExtras()
+      def cnt(k: String): Long = Option(counts(k)).fold(0L)(_.asInstanceOf[Long])
+      val (tombDel, tombUpd) = (cnt("_gf_tdel"), cnt("_gf_tupd"))
+      val tombExpected = tombDel + tombUpd
+      val addExpected = cnt("_gf_apost") + cnt("_gf_ains")
+      // tombstones: every matched / not-matched-by-source row whose clause
+      // fires (updates tombstone their pre-image too). ONE pass writes
+      // BOTH change types' pre-images: the sidecar partitions by a
+      // leading `_gm_ct` level, and each `_gm_ct=<type>/` subtree IS a
+      // standard sidecar dir (partitionCols layout below it) that the
+      // feed's `C` entries point at individually.
+      val tomb =
+        if (tombExpected == 0L) None
+        else tombstone(ledger,
+          joined.filter(tombCond).select(
+            lakeSchema.fieldNames.toSeq.map(c => col("_t_" + c).as(c))
+              ++ Seq(col("_gf_file"), col("_gf_pos"),
+                when(tombDelCond, lit("delete"))
+                  .otherwise(lit("update_preimage")).as("_gm_ct")): _*),
+          "_gm_ct" +: partitionCols, Some(tombExpected)) { cdc =>
           Seq(("delete", tombDel), ("update_preimage", tombUpd))
-            .collect { case (t, n) if n > 0L => (s"$cdcPath/_gm_ct=$t", t) }
-        val abs = new org.apache.hadoop.fs.Path(root, cdcPath).toString
-        val back = Lake.openStagedCdc(spark, abs, base.schemaJson, withLineage = true)
-        val (sidecar, n, files) = Lake.stageDv(spark, lakeDir,
-          back.select(col("_gf_file").as("file"), col("_gf_pos").as("pos")))
-        (files.map(f => f -> Seq(sidecar)).toMap, n, staged)
-      }
-    // post-images and inserts: per clause, each lake column evaluates its
-    // SET/VALUES expression cast to the recorded type, carries the
-    // pre-image (updates) or lands NULL (inserts) when unassigned.
-    // Update post-images and genuine inserts stage as SEPARATE files so
-    // the change feed tags update_postimage vs insert exactly.
-    def updFrame(tag: org.apache.spark.sql.Column, i: Int, cl: MergeClause) =
-      joined.filter(tag === i).select(lakeSchema.map { f =>
-        cl.sets.get(f.name).fold(col("_t_" + f.name))(_.cast(f.dataType)).as(f.name)
-      }: _*)
-    val mAdds = matched.zipWithIndex.collect { case (cl, i) if !cl.delete =>
-      updFrame(col("_gm_am"), i, cl) }
-    val nAdds = notMatchedBySource.zipWithIndex.collect { case (cl, i) if !cl.delete =>
-      updFrame(col("_gm_an"), i, cl) }
-    val iAdds = notMatched.zipWithIndex.map { case (cl, i) =>
-      joined.filter(col("_gm_ai") === i).select(lakeSchema.map { f =>
-        cl.sets.get(f.name)
-          .fold(lit(null).cast(f.dataType): org.apache.spark.sql.Column)(_.cast(f.dataType))
-          .as(f.name)
-      }: _*) }
-    val (postStaged, insStaged) =
-      if (addExpected == 0L) (Seq.empty[String], Seq.empty[String])
-      else {
-        // ONE tagged write stages both families as separate files (the
-        // staging-only _gm_kind level strips on move) — the r12 single
-        // add pass, now CDF-typed
-        val adds =
-          ((mAdds ++ nAdds).map(_.withColumn("_gm_kind", lit("post"))) ++
-            iAdds.map(_.withColumn("_gm_kind", lit("ins"))))
-            .reduce(_.unionByName(_))
-        Lake.enforceChecks(base, adds)
-        val tagged = Lake.stageWriteTagged(spark, lakeDir, adds, "_gm_kind", partitionCols)
-        (tagged.getOrElse("post", Seq.empty), tagged.getOrElse("ins", Seq.empty))
-      }
-    val upStaged = postStaged ++ insStaged
-    val (upRows, upStats) =
-      if (addExpected == 0L) (0L, Map.empty[String, Seq[Lake.ColStat]])
-      else Lake.auditStaged(spark, lakeDir, base.schemaJson, upStaged, Seq(idCol))
-    Lake.publish(spark, Lake.StagedCommit(lakeDir, base, "merge", base.schemaJson,
-      Seq.empty, upStaged, dvRows + upRows, tombExpected + addExpected, upStats,
-      dvAdds = dvAdds, cdcFiles = cdcFiles, postImageFiles = postStaged.toSet))
-    Lake.read(spark, lakeDir)
+            .collect { case (t, n) if n > 0L => (s"$cdc/_gm_ct=$t", t) }
+        }
+      // post-images and inserts: per clause, each lake column evaluates its
+      // SET/VALUES expression cast to the recorded type, carries the
+      // pre-image (updates) or lands NULL (inserts) when unassigned.
+      // Update post-images and genuine inserts stage as SEPARATE files so
+      // the change feed tags update_postimage vs insert exactly.
+      def addsOf(tag: String, clauses: Seq[MergeClause], kind: String,
+          unset: StructField => org.apache.spark.sql.Column) =
+        clauses.zipWithIndex.collect { case (cl, i) if kind == "ins" || !cl.delete =>
+          joined.filter(col(tag) === i).select(lakeSchema.map { f =>
+            cl.sets.get(f.name).fold(unset(f))(_.cast(f.dataType)).as(f.name)
+          } :+ lit(kind).as("_gm_kind"): _*) }
+      val adds =
+        if (addExpected == 0L) NoAdds
+        else stageAdds(ledger,
+          (addsOf("_gm_am", matched, "post", f => col("_t_" + f.name)) ++
+            addsOf("_gm_an", notMatchedBySource, "post", f => col("_t_" + f.name)) ++
+            addsOf("_gm_ai", notMatched, "ins", f => lit(null).cast(f.dataType)))
+            .reduce(_.unionByName(_)),
+          "ins", base.checks, partitionCols, Seq(idCol))
+      if (tomb.isEmpty && addExpected == 0L) None
+      else Some(sparseCommit(ledger, "merge", tomb, adds, tombExpected + addExpected))
     } finally cpRdds.foreach(_.unpersist(blocking = false))
+  }
+
+  // ------------------------------------- the row-level DML core of the seven
+
+  /** What one DML has staged so far, so a throw before publish removes all
+    * of it through [[Lake.abort]]. */
+  private final class DmlLedger(val spark: SparkSession, val lakeDir: String,
+      val base: Lake.LakeState) {
+    private val files = Seq.newBuilder[String]
+    private val dirs = Seq.newBuilder[String]
+    def staged(fs: Seq[String]): Seq[String] = { files ++= fs; fs }
+    def sidecar(dir: String): String = { dirs += dir; dir }
+    /** Removes the named sidecar dirs, or everything staged when none is named. */
+    def abort(only: String*): Unit = {
+      val (fs, ds) = if (only.isEmpty) (files.result(), dirs.result()) else (Nil, only)
+      Lake.abort(spark, Lake.StagedCommit(lakeDir, base, "abort", base.schemaJson,
+        Seq.empty, fs, 0L, 0L, cdcFiles = ds.map(_ -> "")))
+    }
+  }
+
+  /** A DML's stage half: `body` stages through the ledger and returns the
+    * commit to publish (None = nothing changes); a throw aborts. */
+  private def staging(spark: SparkSession, lakeDir: String, base: Lake.LakeState)(
+      body: DmlLedger => Option[Lake.StagedCommit]): Option[Lake.StagedCommit] = {
+    val ledger = new DmlLedger(spark, lakeDir, base)
+    try body(ledger)
+    catch { case e: Throwable =>
+      try ledger.abort() catch { case a: Throwable => e.addSuppressed(a) }
+      throw e
+    }
+  }
+
+  /** [[staging]], then one [[Lake.publish]], then the lake's read-back. */
+  private def dml(spark: SparkSession, lakeDir: String, base: Lake.LakeState,
+      vacuumSuperseded: Boolean = true)(
+      body: DmlLedger => Option[Lake.StagedCommit]): DataFrame = {
+    staging(spark, lakeDir, base)(body).foreach(Lake.publish(spark, _, vacuumSuperseded))
+    Lake.read(spark, lakeDir)
+  }
+
+  private def lakeSchemaOf(base: Lake.LakeState): org.apache.spark.sql.types.StructType =
+    Lake.visible(org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
+
+  /** A staged [[tombstone]] step; `preImage` is the sidecar's read-back. */
+  private final case class Tombstones(dvAdds: Map[String, Seq[String]], rows: Long,
+      matched: Long, cdcFiles: Seq[(String, String)], preImage: DataFrame)
+
+  /** The tombstone step of every sparse DML: ONE pass over the matched
+    * `pre` rows writes the change-feed sidecar (row lineage riding
+    * along), and the deletion vector derives from its read-back — the
+    * lake is never scanned twice. A count the caller does not `know`
+    * rides the sidecar write as an observed metric; zero rolls the empty
+    * sidecar back (None). `cdcFiles` names the dirs the feed serves. */
+  private def tombstone(ledger: DmlLedger, pre: DataFrame, layout: Seq[String],
+      known: Option[Long])(cdcFiles: String => Seq[(String, String)]): Option[Tombstones] = {
+    import ledger.{lakeDir, spark}
+    val (inst, audit) = known.fold(Lake.observedAudit(Map.empty, pre))(n => (pre, () => n))
+    val cdcPath = ledger.sidecar(Lake.stageCdc(spark, lakeDir, inst, layout))
+    val matched = audit()
+    if (matched == 0L) { ledger.abort(cdcPath); None }
+    else {
+      val back = preImage(ledger, cdcPath, withLineage = true)
+      val (sidecar, rows, files) = Lake.stageDv(spark, lakeDir,
+        back.select(col("_gf_file").as("file"), col("_gf_pos").as("pos")))
+      ledger.sidecar(sidecar)
+      Some(Tombstones(files.map(f => f -> Seq(sidecar)).toMap, rows, matched,
+        cdcFiles(cdcPath), back))
+    }
+  }
+
+  /** [[tombstone]] over the rows `matching` picks from the candidates'
+    * lineage read, fed as `changeType`. */
+  private def tombstoneMatches(ledger: DmlLedger, candidates: Seq[String], changeType: String)(
+      matching: DataFrame => DataFrame): Option[Tombstones] =
+    if (candidates.isEmpty) None
+    else tombstone(ledger, matching(Lake.readFilesWithLineage(ledger.spark, ledger.lakeDir,
+      ledger.base.schemaJson, candidates, ledger.base.dvs)), Lake.layoutSpecsOf(ledger.base),
+      None)(cdc => Seq((cdc, changeType)))
+
+  /** A just-staged change-feed sidecar, opened under the lake schema. */
+  private def preImage(ledger: DmlLedger, cdcPath: String, withLineage: Boolean): DataFrame =
+    Lake.openStagedCdc(ledger.spark, new org.apache.hadoop.fs.Path(
+      Lake.fsRoot(ledger.spark, ledger.lakeDir)._2, cdcPath).toString,
+      ledger.base.schemaJson, withLineage)
+
+  private final case class Adds(post: Seq[String], ins: Seq[String], rows: Long,
+      stats: Map[String, Seq[Lake.ColStat]])
+  private val NoAdds = Adds(Seq.empty, Seq.empty, 0L, Map.empty)
+
+  /** The add stage of every row-adding DML: ONE write of `adds`, split
+    * into post-image and insert files by its `_gm_kind` column (a
+    * staging-only level) when it has one, else all of `kind`; then the
+    * footer audit. `checks` ride the write as observed metrics: a
+    * violating batch throws after the write, and the ledger removes it. */
+  private def stageAdds(ledger: DmlLedger, adds: DataFrame, kind: String,
+      checks: Map[String, String], layout: Seq[String], statsCols: Seq[String]): Adds = {
+    import ledger.{lakeDir, spark}
+    val (inst, audit) =
+      if (checks.isEmpty) (adds, () => 0L) else Lake.observedAudit(checks, adds)
+    val byKind =
+      if (adds.columns.contains("_gm_kind"))
+        Lake.stageWriteTagged(spark, lakeDir, inst, "_gm_kind", layout)
+      else Map(kind -> Lake.stageWrite(spark, lakeDir, inst, layout))
+    ledger.staged(byKind.values.flatten.toSeq)
+    audit()
+    val post = byKind.getOrElse("post", Seq.empty)
+    val ins = byKind.getOrElse("ins", Seq.empty)
+    val (rows, stats) = Lake.auditStaged(spark, lakeDir, ledger.base.schemaJson,
+      post ++ ins, statsCols)
+    Adds(post, ins, rows, stats)
+  }
+
+  /** The copy-on-write stage of [[deleteFromLake]] and [[mergeIntoLake]]:
+    * the `survivors` of the `removed` files stage as `AR` rewrites, and
+    * the `replaced` rows as the change-feed sidecar of `changeType`. The
+    * audit stays two-channel: `expected` rides the survivor write as an
+    * observed metric (a separate count would be one more scan of the
+    * affected partitions), against the footer read-back, which also
+    * keeps id-range stats so append pruning survives the rewrite. */
+  private def rewrite(ledger: DmlLedger, action: String, removed: Seq[String],
+      survivors: DataFrame, expected: () => Long, replaced: DataFrame, layout: Seq[String],
+      idCol: String, changeType: String): Lake.StagedCommit = {
+    import ledger.{base, lakeDir, spark}
+    val staged = ledger.staged(Lake.stageWrite(spark, lakeDir, survivors, layout))
+    val n = expected()
+    val (rows, stats) = Lake.auditStaged(spark, lakeDir, base.schemaJson, staged, Seq(idCol))
+    val cdcPath = ledger.sidecar(Lake.stageCdc(spark, lakeDir, replaced, layout))
+    Lake.StagedCommit(lakeDir, base, action, base.schemaJson, removed, staged, rows, n,
+      stats, rewriteFiles = staged.toSet, cdcFiles = Seq((cdcPath, changeType)))
+  }
+
+  /** The one commit of a sparse DML. */
+  private def sparseCommit(ledger: DmlLedger, action: String, tomb: Option[Tombstones],
+      adds: Adds, expected: Long): Lake.StagedCommit =
+    Lake.StagedCommit(ledger.lakeDir, ledger.base, action, ledger.base.schemaJson,
+      Seq.empty, adds.post ++ adds.ins, tomb.fold(0L)(_.rows) + adds.rows, expected, adds.stats,
+      dvAdds = tomb.fold(Map.empty[String, Seq[String]])(_.dvAdds),
+      cdcFiles = tomb.toSeq.flatMap(_.cdcFiles), postImageFiles = adds.post.toSet)
+
+  /** A prepared upsert batch; `ids` is the id set to join on (`_mid`). */
+  private final case class UpsertBatch(rows: DataFrame, count: Long, ids: DataFrame,
+      bounds: Option[(Any, Any, Long)], lakeSchema: org.apache.spark.sql.types.StructType)
+
+  /** Both upserts' batch, None when empty: materialized once (the id set,
+    * the audit expectation and the add stage consume it), with its count,
+    * CHECK sums and id bounds riding the eager checkpoint. Updates must
+    * carry the lake's exact schema: a merge that drops or retypes columns
+    * is corruption, not evolution. */
+  private def upsertBatch(what: String, base: Lake.LakeState, updates: DataFrame,
+      idCol: String): Option[UpsertBatch] = {
+    val (instUpd, updAudit, updExtras) = Lake.observedAuditMetrics(base.checks,
+      updates.dropDuplicates(idCol),
+      Seq(min(col(idCol)).as("_gf_mn"), max(col(idCol)).as("_gf_mx")))
+    val upd = instUpd.localCheckpoint(true)
+    val updCount = updAudit()
+    if (updCount == 0) return None
+    val lakeSchema = lakeSchemaOf(base)
+    val lakeTypes = lakeSchema.map(f => f.name -> f.dataType).toMap
+    val uTypes = upd.schema.map(f => f.name -> f.dataType).toMap
+    require(lakeTypes == uTypes,
+      s"$what: updates schema must equal the lake schema exactly " +
+        s"(updates-only: ${(uTypes.keySet -- lakeTypes.keySet).mkString(", ")}; " +
+        s"lake-only: ${(lakeTypes.keySet -- uTypes.keySet).mkString(", ")}; " +
+        s"retyped: ${lakeTypes.keySet.intersect(uTypes.keySet)
+          .filter(c => lakeTypes(c) != uTypes(c)).mkString(", ")})")
+    // broadcast the id set only while it plausibly fits executor memory —
+    // a corpus-wide re-scoring merge (updCount ~ corpus) must fall back
+    // to a shuffled semi/anti join, not blow the driver on a broadcast.
+    // The cutoff is a BYTE estimate, not a row count: 6M narrow numeric
+    // ids broadcast fine, while 1M wide string ids would be gigabytes
+    val ids0 = upd.select(col(idCol).as("_mid")).distinct()
+    val ids =
+      if (estimatedIdSetBytes(upd, idCol, updCount) <= MergeBroadcastMaxBytes)
+        broadcast(ids0)
+      else ids0
+    val b = updExtras()
+    Some(UpsertBatch(upd, updCount, ids,
+      Option(b("_gf_mn")).map(mn => (mn, b("_gf_mx"), updCount)), lakeSchema))
+  }
+
+  /** The upsert rows as adds: POST-IMAGES where the `replaced` pre-image
+    * sidecar (physical names; not a re-scan of the lake) holds the id,
+    * inserts elsewhere. */
+  private def upsertAdds(batch: UpsertBatch, idCol: String,
+      replaced: Option[DataFrame]): DataFrame = {
+    val updCols = batch.rows.select(batch.lakeSchema.map(f => col(f.name)): _*)
+    replaced.fold(updCols) { pre =>
+      val idPhys = Lake.physicalName(batch.lakeSchema(idCol))
+      updCols.join(pre.select(col(idPhys).as("_lakeid")).distinct(),
+          col(idCol) === col("_lakeid"), "left")
+        .withColumn("_gm_kind",
+          when(col("_lakeid").isNotNull, lit("post")).otherwise(lit("ins")))
+        .drop("_lakeid")
+    }
+  }
+
+  /** The candidate files for a key set: min/max stats first (free,
+    * driver-side), then per-file blooms for the keys min/max cannot prune.
+    * `bounds` are the keys' (min, max, count); None leaves no candidate. */
+  private def keyCandidates(spark: SparkSession, lakeDir: String, base: Lake.LakeState,
+      idCol: String, keyType: org.apache.spark.sql.types.DataType, keys: DataFrame,
+      bounds: Option[(Any, Any, Long)]): Seq[String] =
+    bounds.fold(Seq.empty[String]) { case (mn, mx, n) =>
+      Lake.bloomPrune(spark, lakeDir, base, Lake.pruneByStats(base, idCol, keyType, mn, mx),
+        idCol, keys, n)
+    }
+
+  /** (min, max, count) of the non-null `key`s in one job. */
+  private def keyBounds(df: DataFrame, key: org.apache.spark.sql.Column): Option[(Any, Any, Long)] = {
+    val b = Lake.collectScalar(df.agg(min(key), max(key), count(key)))(0)
+    if (b.isNullAt(0)) None else Some((b.get(0), b.get(1), b.getLong(2)))
+  }
+
+  /** The manifest files of the partitions holding a `lake` row that `hits`
+    * matches: ONE column-pruned pass, then driver-side path-prefix work. A
+    * matched partition owning no manifest file rendered its directory
+    * differently from the writer: refused before anything is staged. */
+  private def affectedFiles(base: Lake.LakeState, lake: DataFrame, hits: DataFrame,
+      on: org.apache.spark.sql.Column, partitionCols: Seq[String]): Seq[String] = {
+    val dirs = Lake.collectScalar(lake.join(hits, on, "left_semi")
+      .select(partitionCols.map(col): _*).distinct())
+      .map(Lake.partitionDir(partitionCols, _)).toSeq
+    val removed = Lake.filesUnder(base.files, dirs)
+    val orphanDirs = dirs.filterNot(d => removed.exists(_.startsWith(d + "/")))
+    if (orphanDirs.nonEmpty)
+      throw new IllegalStateException(
+        s"partition-dir rendering mismatch: ${orphanDirs.mkString(", ")} own no " +
+          "manifest files although rows matched in them — refusing to stage")
+    removed
   }
 
   /** Upsert the corpus in place (bump n_chars for the `% 7` docs, insert

@@ -176,7 +176,7 @@ class ResolveLakeMerge(session: SparkSession) extends Rule[LogicalPlan] {
       // GENERAL grammar: conditional clauses, split shapes, partial SET,
       // WHEN NOT MATCHED BY SOURCE — [[Pipeline.mergeIntoLakeGeneral]]
       case (matched, notMatched, nmbs) =>
-        convertGeneral(m, table, idAttr.name, srcIdExpr, partitionCols,
+        convertGeneral(m, table, idAttr.name, srcIdExpr,
           lakeSchema, targetOut, sourceOut, matched, notMatched, nmbs)
     }
   }
@@ -190,8 +190,7 @@ class ResolveLakeMerge(session: SparkSession) extends Rule[LogicalPlan] {
     * clauses see only the source, not-matched-by-source clauses only the
     * target; no subqueries anywhere. */
   private def convertGeneral(m: MergeIntoTable, table: GraftLakeTable,
-      idCol: String, srcIdExpr: Expression, partitionCols: Seq[String],
-      lakeSchema: StructType,
+      idCol: String, srcIdExpr: Expression, lakeSchema: StructType,
       targetOut: org.apache.spark.sql.catalyst.expressions.AttributeSet,
       sourceOut: org.apache.spark.sql.catalyst.expressions.AttributeSet,
       matched: Seq[MergeAction], notMatched: Seq[MergeAction],
@@ -236,7 +235,7 @@ class ResolveLakeMerge(session: SparkSession) extends Rule[LogicalPlan] {
           delete = false, setsOf(assigns, allowT, allowS, s"$what INSERT"))
       case other => refuse(s"$what action ${other.getClass.getSimpleName} is not supported")
     }
-    LakeMergeGeneralCommand(table.lakeDirPath, idCol, partitionCols,
+    LakeMergeGeneralCommand(table.lakeDirPath, idCol,
       ExprHolder(dis(srcIdExpr, allowT = false, allowS = true, "ON condition")),
       clausesOf(matched, allowT = true, allowS = true, "WHEN MATCHED"),
       clausesOf(notMatched, allowT = false, allowS = true, "WHEN NOT MATCHED"),
@@ -287,8 +286,7 @@ case class GeneralClause(condition: Option[ExprHolder], delete: Boolean,
 
 /** The routed full-grammar MERGE: [[Pipeline.mergeIntoLakeGeneral]]
   * over the source plan, clauses re-bound by name at run time. */
-case class LakeMergeGeneralCommand(lakeDir: String, idCol: String,
-    partitionCols: Seq[String], srcKey: ExprHolder,
+case class LakeMergeGeneralCommand(lakeDir: String, idCol: String, srcKey: ExprHolder,
     matched: Seq[GeneralClause], notMatched: Seq[GeneralClause],
     notMatchedBySource: Seq[GeneralClause],
     source: LogicalPlan) extends LeafRunnableCommand {

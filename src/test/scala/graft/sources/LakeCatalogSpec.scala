@@ -506,6 +506,22 @@ class LakeCatalogSpec extends SparkTestBase {
     assert(Lake.vacuum(spark, out).isEmpty,
       "a violating UPDATE must roll back its staged post-image AND its " +
         "CDC/DV sidecars at refusal")
+    // the general MERGE (conditional clauses) stages its tombstones before
+    // its post-images: a matched UPDATE that breaks the rule must roll
+    // both back too
+    val e3m = intercept[Exception] {
+      Pipeline.mergeIntoLakeGeneral(spark, out, fixture(3 until 5), "doc_id",
+        col("_s_doc_id"),
+        matched = Seq(Pipeline.MergeClause(Some(col("_s_doc_id") === 3L), delete = false,
+          Map("doc_id" -> (col("_t_doc_id") + 5000L)))),
+        notMatched = Seq.empty, notMatchedBySource = Seq.empty)
+    }
+    assert(e3m.getMessage.contains("doc_id_range") && e3m.getMessage.contains("CHECK"))
+    assert(Lake.read(spark, out).count() == 25 &&
+      Lake.read(spark, out).filter(col("doc_id") === 3L).count() == 1)
+    assert(Lake.vacuum(spark, out).isEmpty,
+      "a violating general MERGE must roll back its staged post-images AND its " +
+        "CDC/DV sidecars at refusal")
 
     // the streaming write fails a violating epoch before the manifest moves
     implicit val ctx = spark.sqlContext
